@@ -106,10 +106,6 @@ _INTERVAL_UNIT = {
 }
 
 
-def _ident_like(t: str) -> bool:
-    return bool(t) and (t[0].isalnum() or t[0] in "_`\"'[")
-
-
 def ch_expr(toks: list[str]) -> str:
     """Canonical one-line expression text from dialect tokens:
     operators spaced, calls/commas/dots tight, unary sign attached,

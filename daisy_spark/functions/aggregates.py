@@ -136,14 +136,6 @@ def group_uniq_array(x):
     return F.collect_set(_c(x))
 
 
-def group_array_sorted(x, max_size: int | None = None):
-    """Deterministic variant: sorted output (for oracle-comparable results)."""
-    out = F.sort_array(F.collect_list(_c(x)))
-    if max_size is not None:
-        out = F.slice(out, 1, max_size)
-    return out
-
-
 def group_bit_and(x):
     return F.bit_and(_c(x))
 

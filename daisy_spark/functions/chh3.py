@@ -127,12 +127,6 @@ def to_parent(h: int | None, parent_res: int | None) -> int | None:
     return out
 
 
-def _is_pentagon(h: int) -> bool:
-    if _base_cell(h) not in _PENTAGON_BASE_CELLS:
-        return False
-    return all(_digit(h, r) == 0 for r in range(1, _res(h) + 1))
-
-
 def to_children(h: int | None, child_res: int | None) -> list[int]:
     """All descendants at ``child_res`` (empty when child_res < res;
     pentagons skip the deleted K-axis subtree — digit 1 under a

@@ -215,14 +215,6 @@ def siphash64(s: bytes) -> int:
     return (v0 ^ v1) ^ (v2 ^ v3)
 
 
-def city_combine(hashes: list[int]) -> int:
-    """Multi-argument fold (FunctionsHashing.h combineHashes)."""
-    h = hashes[0]
-    for x in hashes[1:]:
-        h = hash128to64(h, x)
-    return h
-
-
 def _to_i64(u: int) -> int:
     return u - (1 << 64) if u >= (1 << 63) else u
 

@@ -9,8 +9,8 @@ operator compute the same hash family as the JVM expression — required
 wherever a Python-side rewrite must keep its output byte-identical to a
 JVM ``xxhash64`` pipeline (MinHash signatures).
 
-Exactness is pinned by tests/test_nphash.py against the live Spark
-expression over random and edge-case longs.
+Exactness is pinned by ``tests/test_optimizations_r13.py::test_nphash_*``
+against the live Spark expression over random and edge-case longs.
 """
 
 from __future__ import annotations

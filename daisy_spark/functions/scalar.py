@@ -237,10 +237,6 @@ def to_float64(x):
     return _c(x).cast("double")
 
 
-def to_decimal(x, scale, precision=38):
-    return _c(x).cast(f"decimal({precision},{scale})")
-
-
 def to_string(x):
     return _c(x).cast("string")
 
@@ -288,13 +284,6 @@ def from_unix_timestamp64_milli(x):
 
 def from_unix_timestamp64_micro(x):
     return F.timestamp_micros(_c(x).cast("long"))
-
-
-def accurate_cast_or_null(x, type_name: str):
-    spark_t = _INT_TYPES.get(type_name, type_name.lower())
-    return F.try_cast(_c(x), spark_t) if hasattr(F, "try_cast") else F.expr(
-        f"try_cast({_sql(x)} as {spark_t})"
-    )
 
 
 # --- date / time ----------------------------------------------------------
@@ -1463,10 +1452,6 @@ def _sql(x) -> str:
     if isinstance(x, Column):
         raise ValueError("use functions API with Column args, not expr-embedding")
     return str(x)
-
-
-def _lit_sql(s: str) -> str:
-    return "'" + s.replace("'", "\\'") + "'"
 
 
 #: reference-name -> python builder registry for the SQL dialect layer

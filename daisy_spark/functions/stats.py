@@ -125,11 +125,14 @@ def categorical_information_value_df(
     )
 
 
+#: cap on the driver-side Newton iterations of logistic_regression_df
+LOGISTIC_NEWTON_ITERS = 50
+
+
 def logistic_regression_df(
     df: DataFrame,
     x_cols: list[str],
     label_col: str,
-    iters: int = 25,
     lr: float = 2.0,
     tol: float = 1e-4,
 ) -> tuple[list[float], float]:
@@ -152,11 +155,10 @@ def logistic_regression_df(
     holds only the bounded cell table, never data rows.  Features are
     standardized internally; returned weights are de-standardized.
     ``lr`` keeps its meaning as a step-norm bound and ``tol`` is the
-    gradient stopping threshold; the driver-side Newton loop runs
-    ``max(iters, 50)`` iterations at most — on ≤ 4096 cells extra
-    driver iterations are microseconds, so small ``iters`` values are
-    treated as a convergence hint, not a hard cap (tol-based early exit
-    normally stops the loop long before the bound).
+    gradient stopping threshold; the driver-side Newton loop runs at
+    most ``LOGISTIC_NEWTON_ITERS`` iterations — on ≤ 4096 cells each is
+    microseconds, and the tol-based early exit normally stops the loop
+    long before the bound.
 
     Returns ``(weights, bias)`` for p = sigmoid(w·x + b).
     """
@@ -233,7 +235,7 @@ def logistic_regression_df(
     # driver-side numpy on ≤ 4096 points, no further cluster passes
     coef = np.zeros(k + 1)
     step_cap = max(float(lr) * 5.0, 10.0)
-    for _ in range(max(int(iters), 50)):
+    for _ in range(LOGISTIC_NEWTON_ITERS):
         p = 1.0 / (1.0 + np.exp(-np.clip(z @ coef, -500.0, 500.0)))
         err = (wgt * p - pos) / ntot  # Σ (p - y) per cell
         grad = z.T @ err

@@ -5,9 +5,11 @@ row dedup — reference: src/Storages/MergeTree/registerStorageMergeTree.cpp);
 a training-data pipeline additionally needs *content* dedup: exact,
 MinHash-LSH, SimHash, and embedding-cosine near-duplicate detection.
 
-Everything here is pure DataFrame composition over JVM-side expressions
-(``xxhash64``, higher-order array functions) — no Python UDFs, no
-``collect()``, and critically **never an all-pairs cartesian product**:
+Everything here is DataFrame composition, mostly over JVM-side
+expressions (``xxhash64``, higher-order array functions).  The MinHash and
+random-hyperplane signatures are Arrow UDFs (one numpy pass per batch).
+There is no ``collect()`` and critically **never an all-pairs cartesian
+product**:
 
 - exact dedup is one hash-groupBy (map-side combine, one shuffle);
 - MinHash near-dup shuffles on *(band, band-hash)* buckets, so candidate
@@ -634,7 +636,10 @@ def embedding_dedup_pairs(
     0.9999.  Borderline pairs near the 0.95 threshold get ≈ 0.93 recall —
     the standard SRP-LSH trade; verification is exact, so precision is 1.
     """
-    from daisy_spark.operators.similarity import with_hyperplane_signature
+    from daisy_spark.operators.similarity import (
+        cosine_expr,
+        with_hyperplane_signature,
+    )
 
     rows_per_band = planes // bands
     # band on ids ONLY — the shuffled banding rows are (id, band, bv)
@@ -673,20 +678,8 @@ def embedding_dedup_pairs(
         .distinct()
     )
 
-    # exact-cosine verify on the candidate pairs via the Arrow-batched
-    # numpy scorer (guide §4.1/§4.2): the joins carry the RAW float
-    # vectors (half the bytes of the double unit vectors the previous
-    # normalize-then-fold-dot form shipped), and the per-pair work is
-    # one einsum per batch instead of an interpreted fold per row.
-    # Rounding safety vs the oracle: tools/cosine_tolerance.py.
-    from daisy_spark.operators.similarity import cosine_pandas
-
-    # the threshold filter references the UDF's output column, which
-    # the optimizer answers by evaluating the UDF below the pushed
-    # filter AND again in the projection (two ArrowEvalPython nodes —
-    # guide §4.4); asNondeterministic() pins a single evaluation (the
-    # scorer is in fact deterministic; the marker is an optimizer fence)
-    score = cosine_pandas().asNondeterministic()
+    # exact-cosine verify on the candidate pairs: the joins carry the
+    # RAW float vectors, scored by the same fold as every other cosine
     vecs = df.select(F.col(id_col), F.col(vec_col))
     return (
         cand.join(
@@ -700,7 +693,7 @@ def embedding_dedup_pairs(
         .select(
             "id1",
             "id2",
-            score(F.col("_v1"), F.col("_v2")).alias("cosine"),
+            cosine_expr("_v1", "_v2").alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
     )

@@ -74,14 +74,6 @@ def any_join(
     return left.join(deduped, on=on, how=how)
 
 
-def semi_join_with_columns(
-    left: DataFrame, right: DataFrame, on: list[str], how: str = "left"
-) -> DataFrame:
-    """Reference SEMI JOIN that still projects right-side columns
-    (HashJoin.h:81-82) = inner join against the per-key-deduped right."""
-    return any_join(left, right, on, how="inner" if how == "left" else how)
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -166,9 +158,3 @@ def asof_join(
 
 def cross_join(left: DataFrame, right: DataFrame) -> DataFrame:
     return left.crossJoin(right)
-
-
-def global_join(left: DataFrame, right: DataFrame, on, how: str = "inner") -> DataFrame:
-    """GLOBAL JOIN: right side evaluated once and broadcast
-    (InJoinSubqueriesPreprocessor.cpp) -> broadcast hint."""
-    return left.join(F.broadcast(right), on=on, how=how)

@@ -144,11 +144,6 @@ def with_totals(
     return grouped.drop("__gid")
 
 
-def rollup_agg(df: DataFrame, group_cols: Sequence[str], aggs: dict[str, Column]) -> DataFrame:
-    """WITH ROLLUP (RollupStep.cpp) — native Spark rollup."""
-    return df.rollup(*group_cols).agg(*[c.alias(n) for n, c in aggs.items()])
-
-
 def cube_agg(df: DataFrame, group_cols: Sequence[str], aggs: dict[str, Column]) -> DataFrame:
     """WITH CUBE (CubeStep.cpp) — native Spark cube."""
     return df.cube(*group_cols).agg(*[c.alias(n) for n, c in aggs.items()])
@@ -225,8 +220,3 @@ def sample_by_key(
     d = F.lit(float(1 << 63))
     u = h / d
     return df.filter((u >= offset) & (u < offset + fraction))
-
-
-def distinct_on(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
-    """DISTINCT [ON cols] (DistinctTransform.cpp)."""
-    return df.dropDuplicates(list(cols)) if cols else df.distinct()

@@ -15,8 +15,10 @@ Two tiers, mirroring how a 100-TB training-data pipeline would run ANN:
   building block for LSH-bucketed ANN and embedding dedup
   (:func:`daisy_spark.operators.dedup.embedding_dedup_pairs`).
 
-All vector math is JVM-side higher-order expressions (``zip_with`` +
-``aggregate`` folds) inside whole-stage codegen — no Python UDFs.
+Every cosine is :func:`cosine_expr`, a JVM-side left fold (``zip_with`` +
+``aggregate``).  The one Python boundary is the hyperplane projection in
+:func:`with_hyperplane_signature`, an Arrow UDF doing one numpy matmul per
+batch.
 """
 
 from __future__ import annotations
@@ -42,50 +44,19 @@ def _norm(a: str) -> str:
 def cosine_expr(a: str, b: str) -> F.Column:
     """Cosine similarity between two array columns as a single expression.
 
-    Higher-order-function folds run INTERPRETED in Catalyst — fine for
-    tiny inputs (the IVF centroid probe: |queries| × |cells| rows), but
-    the bulk scoring paths use :func:`cosine_pandas` (Arrow-batched
-    numpy) instead: one einsum per batch measured ~3-5× faster per row
-    than the interpreted fold (r13; the bit-identical literal-chain
-    alternative was measured and REJECTED in r12 — 64-term chains blow
-    the JVM 64 KB codegen limit and ran ~40% slower)."""
-    return F.expr(f"{_dot(a, b)} / ({_norm(a)} * {_norm(b)})")
+    The one cosine implementation: every scorer in the engine (the IVF
+    centroid probe and the bulk top-k, LSH re-rank and dedup verify
+    paths) goes through it.  Elements widen float → double, and dot
+    product and norms are each one left fold, so every path sums in the
+    same order.  The folds run interpreted in Catalyst, yet on the bulk
+    paths this measured faster than an Arrow-batched numpy scorer, whose
+    per-task Python worker start-up outweighed its einsum; a spelled-out
+    literal chain blew the JVM 64 KB codegen limit and ran ~40% slower.
 
-
-def cosine_pandas() -> "F.udf":
-    """Arrow-batched cosine scorer: numpy row-wise dot/norms per batch
-    (guide §4.1/§4.2 — hand whole batches to vectorized native code).
-
-    Float semantics vs the JVM fold: elements are widened float32 →
-    float64 exactly as ``cast(x as double)`` does; only the SUMMATION
-    ORDER differs (einsum reassociates).  The measured perturbation is
-    ≤ ~1e-15 while the declared queries' 6-dp rounding boundaries,
-    rank gaps and thresholds sit ≥ 1e-7 away (tools/cosine_tolerance.py,
-    committed in OPTIMIZATION_r13.md) — no observable output can flip.
-
-    Vectors within a batch must share one dimensionality (np.stack), as
-    every embedding column in the pipeline does.
-    """
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _cos(a: "pd.Series", b: "pd.Series") -> "pd.Series":
-        import numpy as np
-
-        if len(a) == 0:
-            return pd.Series([], dtype="float64")
-        A = np.stack(a.to_numpy()).astype(np.float64, copy=False)
-        B = np.stack(b.to_numpy()).astype(np.float64, copy=False)
-        num = np.einsum("ij,ij->i", A, B)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            den = np.sqrt(np.einsum("ij,ij->i", A, A)) * np.sqrt(
-                np.einsum("ij,ij->i", B, B)
-            )
-            out = num / den
-        return pd.Series(out)
-
-    _cos.__annotations__ = {"a": pd.Series, "b": pd.Series, "return": pd.Series}
-    return pandas_udf(_cos, "double")
+    A zero vector has no direction: its cosine is NULL (``try_divide``;
+    a plain ``/`` raises DIVIDE_BY_ZERO under ANSI mode), so it ranks
+    last in a top-k and never passes a dedup threshold."""
+    return F.expr(f"try_divide({_dot(a, b)}, {_norm(a)} * {_norm(b)})")
 
 
 def cosine_topk(
@@ -112,7 +83,7 @@ def cosine_topk(
     scored = corpus.select(corpus_id, corpus_vec).join(q).select(
         F.col("_qid").alias(query_id),
         F.col(corpus_id),
-        cosine_pandas()(F.col("_qvec"), F.col(corpus_vec)).alias("cosine"),
+        cosine_expr("_qvec", corpus_vec).alias("cosine"),
     )
     w = Window.partitionBy(query_id).orderBy(
         F.col("cosine").desc(), F.col(corpus_id)
@@ -187,7 +158,7 @@ def ivf_topk(
         F.col("_qid").alias(query_id),
         F.col(corpus_id),
         F.col(cell_col),
-        cosine_pandas()(F.col("_qvec"), F.col(corpus_vec)).alias("cosine"),
+        cosine_expr("_qvec", corpus_vec).alias("cosine"),
     )
     w = Window.partitionBy(query_id).orderBy(
         F.col("cosine").desc(), F.col(corpus_id)
@@ -308,7 +279,7 @@ def lsh_ann_topk(
     scored = cand.select(
         F.col("_qid").alias(query_id),
         F.col(corpus_id),
-        cosine_pandas()(F.col("_qvec"), F.col(corpus_vec)).alias("cosine"),
+        cosine_expr("_qvec", corpus_vec).alias("cosine"),
     )
     w = Window.partitionBy(query_id).orderBy(
         F.col("cosine").desc(), F.col(corpus_id)

@@ -128,14 +128,6 @@ def _lang_score_sql(text_col: str, words: tuple[str, ...]) -> str:
     return _stopword_count_sql(text_col, words)
 
 
-def lang_scores(text_col: str) -> dict[str, Column]:
-    """Stopword-voting score per candidate language."""
-    return {
-        lang: F.expr(_lang_score_sql(text_col, words))
-        for lang, words in LANG_MARKERS.items()
-    }
-
-
 def lang_id(text_col: str) -> Column:
     """argmax language with deterministic tie-break (alphabetical order of
     language code; 'und' when no marker hits)."""

@@ -35,24 +35,3 @@ def top_k_df(
         counts.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
-
-
-def top_k_array(
-    df: DataFrame,
-    value_col: str,
-    k: int = 10,
-    group_cols: list[str] | None = None,
-    out_col: str = "top_k",
-) -> DataFrame:
-    """Same, but folded back to one array row per group (the reference's
-    topK() return shape)."""
-    group_cols = group_cols or []
-    ranked = top_k_df(df, value_col, k=k, group_cols=group_cols)
-    # collect_list of ≤ k pre-ranked rows per group — bounded buffer
-    gb = ranked.groupBy(*group_cols) if group_cols else ranked.groupBy()
-    return gb.agg(
-        F.expr(
-            "transform(array_sort(collect_list(named_struct('rank', rank, 'value', value))), "
-            "s -> s.value)"
-        ).alias(out_col)
-    )

@@ -56,9 +56,14 @@ def with_ingest_columns(
     """Attach the ingest conventions: ``_time`` (defaulted to
     current_timestamp when absent, like the rawstore DEFAULT now64(3)),
     ``_idem`` (defaulted to a content hash when absent), and the
-    granularity partition column."""
+    granularity partition column.
+
+    The content hash covers only the caller's columns: a defaulted
+    ``_time`` differs on every call, so hashing it would give a replayed
+    row a new key and break exactly-once."""
     if granularity not in GRANULARITY_EXPRS:
         raise ValueError(f"granularity must be one of M/D/H/m, got {granularity!r}")
+    content = df.columns
     if time_col and time_col != TIME_COL:
         df = df.withColumn(TIME_COL, F.col(time_col).cast("timestamp"))
     elif TIME_COL not in df.columns:
@@ -67,7 +72,7 @@ def with_ingest_columns(
         df = df.withColumn(IDEM_COL, F.col(idem_col).cast("string"))
     elif IDEM_COL not in df.columns:
         df = df.withColumn(
-            IDEM_COL, F.sha2(F.to_json(F.struct(*df.columns)), 256)
+            IDEM_COL, F.sha2(F.to_json(F.struct(*content)), 256)
         )
     return df.withColumn(PARTITION_COL, GRANULARITY_EXPRS[granularity]())
 

@@ -204,7 +204,7 @@ def test_logistic_histogram_trainer_generalizes(spark):
         ((F.col("id") * 7) % 29).cast("double").alias("x2"),
     )
     df = df.withColumn("y", ((F.col("x1") + 2 * F.col("x2")) > 45).cast("int"))
-    w, b = ST.logistic_regression_df(df, ["x1", "x2"], "y", iters=30)
+    w, b = ST.logistic_regression_df(df, ["x1", "x2"], "y")
     p = ST.logistic_predict(w, b, ["x1", "x2"])
     acc = df.agg(
         F.avg(((p > 0.5).cast("int") == F.col("y")).cast("double"))

@@ -77,53 +77,17 @@ def test_nphash_int_literal_family(spark):
 
 
 # ---------------------------------------------------------------------------
-# Arrow-batched cosine == interpreted fold (operators/similarity.py)
+# embedding dedup verify == numpy cosine (operators/dedup.py)
 # ---------------------------------------------------------------------------
 
 
-def test_cosine_pandas_matches_fold(spark, sf_dir):
-    from daisy_spark.catalog import load_table
-    from daisy_spark.operators.similarity import cosine_expr, cosine_pandas
-
-    e = load_table(spark, sf_dir, "embeddings")
-    pairs = (
-        e.select(F.col("vec_id").alias("i1"), F.col("embedding").alias("v1"))
-        .join(
-            e.select(
-                F.col("vec_id").alias("i2"), F.col("embedding").alias("v2")
-            ),
-            F.col("i1") + 1 == F.col("i2"),
-        )
-    )
-    both = pairs.select(
-        cosine_expr("v1", "v2").alias("fold"),
-        cosine_pandas()(F.col("v1"), F.col("v2")).alias("np"),
-    ).collect()
-    assert both, "no pairs scored"
-    for r in both:
-        assert abs(r["fold"] - r["np"]) < 1e-12
-        assert round(r["fold"], 6) == round(r["np"], 6)
-
-
-def test_cosine_pandas_empty_partition(spark):
-    from daisy_spark.operators.similarity import cosine_pandas
-
-    df = spark.createDataFrame(
-        [([1.0, 0.0], [1.0, 0.0])], "a array<double>, b array<double>"
-    ).repartition(4)
-    rows = df.select(cosine_pandas()(F.col("a"), F.col("b")).alias("c")).collect()
-    assert rows[0]["c"] == pytest.approx(1.0)
-
-
-def test_embedding_dedup_pairs_scores_match_oracle_form(spark, sf_dir):
-    """The raw-vector numpy verify must reproduce the oracle's
-    list_cosine_similarity (round 6) on every emitted pair."""
-    from daisy_spark.catalog import load_table
+def _verify_embedding_dedup(e, threshold):
+    """Run embedding_dedup_pairs on ``e`` and check every emitted score
+    against numpy's cosine over the same float32 vectors."""
     from daisy_spark.operators.dedup import embedding_dedup_pairs
 
-    e = load_table(spark, sf_dir, "embeddings")
     got = embedding_dedup_pairs(
-        e, vec_col="embedding", id_col="vec_id", threshold=0.9
+        e, vec_col="embedding", id_col="vec_id", threshold=threshold
     ).collect()
     vecs = {
         r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64)
@@ -132,8 +96,39 @@ def test_embedding_dedup_pairs_scores_match_oracle_form(spark, sf_dir):
     for r in got:
         a, b = vecs[r["id1"]], vecs[r["id2"]]
         ref = float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
-        assert r["cosine"] >= 0.9
+        assert r["cosine"] >= threshold
         assert math.isclose(r["cosine"], ref, abs_tol=1e-9)
+    return {(r["id1"], r["id2"]) for r in got}
+
+
+def test_embedding_dedup_pairs_scores_match_oracle_form(spark, sf_dir):
+    """The raw-vector fold verify must reproduce the oracle's
+    list_cosine_similarity (round 6) on every emitted pair.
+
+    The generated tables hold no pair above 0.9, so a second input
+    plants some: base vectors, near-copies (cosine >= 0.99) and exact
+    copies.  Every exact copy must come back.  Two zero vectors share a
+    bucket but have no cosine, so they must not pair up."""
+    from daisy_spark.catalog import load_table
+
+    _verify_embedding_dedup(load_table(spark, sf_dir, "embeddings"), 0.9)
+
+    rng = np.random.default_rng(14)
+    rows, exact = [], set()
+    for i, v in enumerate(rng.standard_normal((6, 32))):
+        near = v + 0.01 * rng.standard_normal(32)
+        assert v @ near / (np.linalg.norm(v) * np.linalg.norm(near)) >= 0.99
+        rows += [(100 * i, v), (100 * i + 1, near), (100 * i + 2, v)]
+        exact.add((100 * i, 100 * i + 2))
+    rows += [(900, np.zeros(32)), (901, np.zeros(32))]
+    planted = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in rows],
+        "vec_id long, embedding array<float>",
+    ).repartition(3)
+    pairs = _verify_embedding_dedup(planted, 0.9)
+    assert pairs
+    assert exact <= pairs
+    assert not {a for pair in pairs for a in pair} & {900, 901}
 
 
 # ---------------------------------------------------------------------------
@@ -208,14 +203,14 @@ def test_logistic_regression_null_features(spark):
 
     rows = [(float(i), 1.0 if i > 50 else 0.0) for i in range(100)]
     clean = spark.createDataFrame(rows, "x double, y double")
-    w0, b0 = logistic_regression_df(clean, ["x"], "y", iters=30)
+    w0, b0 = logistic_regression_df(clean, ["x"], "y")
 
     noisy = clean.unionByName(
         spark.createDataFrame(
             [(None, 1.0), (None, 0.0), (3.0, None)], "x double, y double"
         )
     )
-    w1, b1 = logistic_regression_df(noisy, ["x"], "y", iters=30)
+    w1, b1 = logistic_regression_df(noisy, ["x"], "y")
     assert w1 == pytest.approx(w0)
     assert b1 == pytest.approx(b0)
 
@@ -227,7 +222,7 @@ def test_logistic_regression_all_null_feature(spark):
         [(None, 1.0), (None, 0.0)], "x double, y double"
     )
     # degenerate but must not raise (zero usable rows -> zero model)
-    w, b = logistic_regression_df(df, ["x"], "y", iters=5)
+    w, b = logistic_regression_df(df, ["x"], "y")
     assert all(math.isfinite(v) for v in w + [b])
 
 

@@ -167,7 +167,7 @@ def test_logistic_regression_learns_separable_boundary(spark):
         (F.col("id") % 100).cast("double").alias("x"),
         ((F.col("id") % 100) >= 50).cast("int").alias("y"),
     )
-    w, b = ST.logistic_regression_df(df, ["x"], "y", iters=30)
+    w, b = ST.logistic_regression_df(df, ["x"], "y")
     p = ST.logistic_predict(w, b, ["x"])
     acc = df.agg(
         F.avg(((p > 0.5).cast("int") == F.col("y")).cast("double"))

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 from pyspark.sql import functions as F
 
@@ -44,6 +45,18 @@ def test_batch_ingest_defaults_time_and_idem(spark, tmp_path):
     assert r.appended == 2 and r.deduped == 1
     got = ST.read_table(spark, sink)
     assert {c for c in got.columns} >= {"v", "_time", "_idem", "_part"}
+
+
+def test_batch_ingest_replay_without_time_column(spark, tmp_path):
+    # the defaulted _time differs per call; the content key must not
+    sink = str(tmp_path / "tbl3")
+    df = spark.createDataFrame([{"v": 1}, {"v": 2}])
+    r1 = ST.ingest_batch(df, sink)
+    assert r1.appended == 2 and r1.deduped == 0
+    time.sleep(1.5)
+    r2 = ST.ingest_batch(df, sink)
+    assert r2.appended == 0 and r2.deduped == 2
+    assert ST.read_table(spark, sink).count() == 2
 
 
 def test_stream_ingest_dedup_and_restart(spark, tmp_path):

@@ -32,37 +32,24 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+# the timing loop comes from this file's directory, imported before a
+# worker puts its variant's tree first on sys.path: both variants are
+# timed by the same loop, and only daisy_spark differs between them
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from bench_one import hot_noop, hot_session  # noqa: E402
+
 
 def worker(queries: list[str], reps: int) -> None:
     sys.path.insert(0, os.getcwd())
-    import time
-
-    from daisy_spark.catalog import build_bucketed_mirror
     from daisy_spark.queries import QUERIES
-    from daisy_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("daisy_spark_ab")
-    spark.sparkContext.setLogLevel("ERROR")
-    if os.environ.get("SPARK_GRAFT_BUCKET", "1") != "0":
-        build_bucketed_mirror(spark, sf_dir)
-    QUERIES["pricing_summary"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    spark = hot_session("daisy_spark_ab", sf_dir)
     out: dict[str, list[float]] = {}
     for name in queries:
         fn = QUERIES[name]
-        spark.catalog.clearCache()
-        spark.sparkContext.setJobDescription(f"ab:{name}:warm")
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        ts = []
-        for i in range(reps):
-            spark.catalog.clearCache()
-            spark.sparkContext.setJobDescription(f"ab:{name}:rep{i}")
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            ts.append(round(time.perf_counter() - t0, 4))
-        out[name] = ts
+        ts = hot_noop(spark, f"ab:{name}", lambda: fn(spark, sf_dir), reps)
+        out[name] = [round(t, 4) for t in ts]
     spark.stop()
     print("ABJSON:" + json.dumps(out))
 

@@ -6,7 +6,10 @@ df.write.format("noop") so the full computation (every column) is paid
 without driver-transfer cost.  Prints per-rep times + min/median.
 
 NOT the driver-contract bench (bench.py is); this is the measurement
-loop for optimization work.
+loop for optimization work.  :func:`hot_noop` is the one timing loop the
+other tools (ab_bench, scaling_sf1, profile_dedup_near) share, so this
+module imports ``daisy_spark`` only inside functions: a caller decides
+which tree is first on ``sys.path`` before it calls in.
 """
 
 from __future__ import annotations
@@ -16,14 +19,45 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from daisy_spark.catalog import build_bucketed_mirror
-from daisy_spark.queries import QUERIES
-from daisy_spark.session import get_spark
+def hot_session(app: str, sf_dir: str):
+    """A Spark session with the bucketed mirror built (unless
+    ``SPARK_GRAFT_BUCKET=0``) and codegen warmed by one query."""
+    from daisy_spark.catalog import build_bucketed_mirror
+    from daisy_spark.queries import QUERIES
+    from daisy_spark.session import get_spark
+
+    spark = get_spark(app)
+    spark.sparkContext.setLogLevel("ERROR")
+    if os.environ.get("SPARK_GRAFT_BUCKET", "1") != "0":
+        build_bucketed_mirror(spark, sf_dir)
+    QUERIES["pricing_summary"](spark, sf_dir).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    return spark
+
+
+def hot_noop(spark, label: str, df_fn, reps: int) -> list[float]:
+    """Seconds per rep of writing ``df_fn()`` to the noop sink: one warm
+    run, then ``reps`` timed runs, each after ``clearCache``."""
+    sc = spark.sparkContext
+    ts: list[float] = []
+    try:
+        for tag in ["warm"] + [f"rep{i}" for i in range(reps)]:
+            spark.catalog.clearCache()
+            sc.setJobDescription(f"{label}: {tag}")
+            t0 = time.perf_counter()
+            df_fn().write.format("noop").mode("overwrite").save()
+            ts.append(time.perf_counter() - t0)
+        return ts[1:]
+    finally:
+        sc.setJobDescription(None)
 
 
 def main() -> None:
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from daisy_spark.queries import QUERIES
+
     args = sys.argv[1:]
     reps = 5
     if args and args[0] == "-n":
@@ -31,34 +65,16 @@ def main() -> None:
         args = args[2:]
     names = args or list(QUERIES)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("daisy_spark_bench_one")
-    spark.sparkContext.setLogLevel("ERROR")
-    if os.environ.get("SPARK_GRAFT_BUCKET", "1") != "0":
-        build_bucketed_mirror(spark, sf_dir)
-    # warm codegen/JIT paths once
-    QUERIES["pricing_summary"](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    spark = hot_session("daisy_spark_bench_one", sf_dir)
     for name in names:
-        fn = QUERIES[name]
-        spark.catalog.clearCache()
-        sc = spark.sparkContext
         try:
-            sc.setJobDescription(f"{name}: warm")
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            ts = []
-            for i in range(reps):
-                spark.catalog.clearCache()
-                sc.setJobDescription(f"{name}: rep{i}")
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                ts.append(time.perf_counter() - t0)
+            ts = hot_noop(spark, name, lambda: QUERIES[name](spark, sf_dir), reps)
             print(
                 f"{name:24s} min={min(ts):.3f} med={statistics.median(ts):.3f} "
                 + " ".join(f"{t:.3f}" for t in ts)
             )
         except Exception as exc:  # noqa: BLE001
             print(f"{name:24s} FAIL {type(exc).__name__}: {exc}")
-        finally:
-            sc.setJobDescription(None)
     spark.stop()
 
 

@@ -10,7 +10,6 @@ from __future__ import annotations
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -20,18 +19,11 @@ from daisy_spark.catalog import load_table  # noqa: E402
 from daisy_spark.operators import dedup as D  # noqa: E402
 from daisy_spark.session import get_spark  # noqa: E402
 
+from bench_one import hot_noop  # noqa: E402  (from this script's directory)
+
 
 def timeit(spark, label, df_fn, reps=3):
-    sc = spark.sparkContext
-    sc.setJobDescription(f"{label}: warm")
-    df_fn().write.format("noop").mode("overwrite").save()
-    ts = []
-    for i in range(reps):
-        spark.catalog.clearCache()
-        sc.setJobDescription(f"{label}: rep{i}")
-        t0 = time.perf_counter()
-        df_fn().write.format("noop").mode("overwrite").save()
-        ts.append(time.perf_counter() - t0)
+    ts = hot_noop(spark, label, df_fn, reps)
     print(f"{label:28s} med={statistics.median(ts):.3f}  " +
           " ".join(f"{t:.3f}" for t in ts), flush=True)
 
@@ -54,13 +46,13 @@ def main() -> None:
         )
 
     def sig():
-        return D.with_minhash_signature(
+        return D.minhash_signature_pandas(
             shingled(), "doc_id", shingle_col="hshingles", num_hashes=64
         )
 
     def cand():
         return D.minhash_candidates(
-            sig().persist(), "doc_id", bands=16, rows_per_band=4,
+            sig(), "doc_id", bands=16, rows_per_band=4,
             max_bucket_size=1000,
         )
 

@@ -23,41 +23,22 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+from bench_one import hot_noop, hot_session  # noqa: E402  (from this script's directory)
+
 
 def worker(queries: list[str], reps: int) -> None:
-    import time
-
     sys.path.insert(0, REPO)
-    from daisy_spark.catalog import build_bucketed_mirror
     from daisy_spark.queries import QUERIES
-    from daisy_spark.session import get_spark
 
     sf1_dir = os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/daisy_sf1")
-    spark = get_spark("daisy_spark_scaling")
-    spark.sparkContext.setLogLevel("ERROR")
-    if os.environ.get("SPARK_GRAFT_BUCKET", "1") != "0":
-        build_bucketed_mirror(spark, sf1_dir)
-    QUERIES["pricing_summary"](spark, sf1_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    spark = hot_session("daisy_spark_scaling", sf1_dir)
     out: dict[str, list[float]] = {}
     for name in queries:
-        spark.catalog.clearCache()
-        spark.sparkContext.setJobDescription(f"scale:{name}:warm")
         try:
-            QUERIES[name](spark, sf1_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            ts = []
-            for i in range(reps):
-                spark.catalog.clearCache()
-                spark.sparkContext.setJobDescription(f"scale:{name}:rep{i}")
-                t0 = time.perf_counter()
-                QUERIES[name](spark, sf1_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                ts.append(round(time.perf_counter() - t0, 4))
-            out[name] = ts
+            ts = hot_noop(
+                spark, f"scale:{name}", lambda: QUERIES[name](spark, sf1_dir), reps
+            )
+            out[name] = [round(t, 4) for t in ts]
         except Exception as exc:  # noqa: BLE001
             out[name] = []
             print(f"{name} FAIL {type(exc).__name__}: {exc}", file=sys.stderr)
