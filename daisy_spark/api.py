@@ -10,7 +10,9 @@ reads a `_time`-bearing table (src/Interpreters/AddTimeParamVisitor.cpp:
 Spark-first: rather than rewriting SQL text, the time predicate is
 applied AT THE SCAN — ``search`` registers time-bounded temp views for
 every `_time`-bearing table, then runs the (dialect-translated) query
-against them.  Catalyst pushes the bound into the parquet scan, and for
+against them.  Tables are read through ``catalog.read_parquet``, which
+keeps each path's inferred schema for the session, so building a search
+starts no Spark job.  Catalyst pushes the bound into the parquet scan, and for
 the driver's nanosecond-timestamp events table the bound is applied to
 the RAW int64 column *before* the µs conversion, so it lands in
 ``PushedFilters`` (a filter on the derived timestamp column would not).
@@ -25,11 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from daisy_spark.catalog import (
-    TESTDATA_TABLES,
-    _ensure_nanos_readable,
-    normalize_nanos,
-)
+from daisy_spark.catalog import TESTDATA_TABLES, normalize_nanos, read_parquet
 
 #: time column per test table (events uses `ts` as its `_time`)
 TIME_COLUMNS = {"events": "ts"}
@@ -52,10 +50,13 @@ def load_time_bounded(
 ) -> DataFrame:
     """Load a table with the `_time` bound applied where the scan can use
     it.  For nanos-encoded columns the filter runs on the raw int64 BEFORE
-    conversion — visible as PushedFilters in the parquet scan node."""
+    conversion — visible as PushedFilters in the parquet scan node.
+
+    The table is read through :func:`catalog.read_parquet`, so its stored
+    schema (which the bound branches on) is inferred once per session and
+    a repeated search builds without starting a Spark job."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    _ensure_nanos_readable(spark)
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     tcol = TIME_COLUMNS.get(name)
     if tcol is None:
         return normalize_nanos(name, df)

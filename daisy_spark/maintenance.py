@@ -25,6 +25,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from daisy_spark.catalog import read_parquet, recording_write
 from daisy_spark.streaming import PARTITION_COL
 
 
@@ -41,15 +42,20 @@ def _atomic_rewrite(spark: SparkSession, path: str, df: DataFrame) -> None:
     Spark cannot overwrite a path it is reading; staging keeps the table
     readable until the swap and makes a crashed rewrite recoverable (the
     original is intact until the final rename).  The ingest partitioning
-    column, when present, is preserved as directory partitioning."""
+    column, when present, is preserved as directory partitioning.  The
+    swap is recorded with the session's schema resolver, so the next read
+    of ``path`` reuses its schema when the column types did not change."""
     staging = path.rstrip("/") + ".__rewrite__"
     backup = path.rstrip("/") + ".__old__"
     writer = df.write.mode("overwrite")
+    parts = ()
     if PARTITION_COL in df.columns:
         writer = writer.partitionBy(PARTITION_COL)
-    writer.parquet(staging)
-    os.rename(path, backup)
-    os.rename(staging, path)
+        parts = (PARTITION_COL,)
+    with recording_write(spark, path, df.schema, parts):
+        writer.parquet(staging)
+        os.rename(path, backup)
+        os.rename(staging, path)
     shutil.rmtree(backup)
 
 
@@ -66,7 +72,7 @@ def apply_ttl(
     DIRECTORIES are deleted without reading a row — the scan+rewrite
     fallback only runs for the single boundary partition.
     """
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     cutoff = F.lit(older_than).cast("timestamp")
     before = df.count()
 
@@ -87,12 +93,12 @@ def apply_ttl(
                 if part < cutoff_day:  # strictly before the cutoff's day
                     shutil.rmtree(os.path.join(path, entry))
                     dropped_dirs += 1
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
 
     remaining_expired = df.filter(F.col(time_col) < cutoff).limit(1).count()
     if remaining_expired:
         _atomic_rewrite(spark, path, df.filter(F.col(time_col) >= cutoff))
-    after = spark.read.parquet(path).count()
+    after = read_parquet(spark, path).count()
     return MaintenanceResult(before, after, dropped_dirs)
 
 
@@ -100,10 +106,10 @@ def mutate_delete(
     spark: SparkSession, path: str, predicate: Column
 ) -> MaintenanceResult:
     """ALTER TABLE ... DELETE WHERE predicate — rewrite without matches."""
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     before = df.count()
     _atomic_rewrite(spark, path, df.filter(~predicate))
-    after = spark.read.parquet(path).count()
+    after = read_parquet(spark, path).count()
     return MaintenanceResult(before, after)
 
 
@@ -115,7 +121,7 @@ def mutate_update(
 ) -> MaintenanceResult:
     """ALTER TABLE ... UPDATE col = expr WHERE predicate — conditional
     rewrite of the assigned columns."""
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     before = df.count()
     out = df
     for col, expr in assignments.items():
@@ -134,7 +140,7 @@ def optimize(
     ``target_partitions``, default = max(1, bytes/128MB)) and, with a
     TableSpec, apply engine merge semantics so reads no longer need
     FINAL."""
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     before = df.count()
     if final_spec is not None:
         from daisy_spark.operators.final import read_final
@@ -149,5 +155,5 @@ def optimize(
         target_partitions = max(1, total_bytes // (128 << 20))
     out = df.coalesce(int(target_partitions))
     _atomic_rewrite(spark, path, out)
-    after = spark.read.parquet(path).count()
+    after = read_parquet(spark, path).count()
     return MaintenanceResult(before, after)

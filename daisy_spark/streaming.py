@@ -29,8 +29,10 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from daisy_spark.catalog import read_parquet, recording_write
 
 #: reference granularity -> partition column expression over _time
 #: (TableRestRouterHandler.cpp:55-58); thunks because building a Column
@@ -97,6 +99,10 @@ def ingest_batch(
     Scale shape: the existing-keys read prunes to the partitions the
     incoming batch touches (partition filter on ``_part``), and the
     anti-join shuffles on the key — no full-sink scan.
+
+    Every append writes its columns in the staged order, and the append
+    is recorded with the session's schema resolver, so the searches that
+    follow an ingest read the sink without a schema-inference job.
     """
     spark = df.sparkSession
     staged = with_ingest_columns(df, time_col, idem_col, granularity)
@@ -105,18 +111,23 @@ def ingest_batch(
     if os.path.exists(path):
         parts = [r[0] for r in staged.select(PARTITION_COL).distinct().collect()]
         existing = (
-            spark.read.parquet(path)
+            read_parquet(spark, path)
             .filter(F.col(PARTITION_COL).isin(parts))
             .select(IDEM_COL)
         )
-        staged = staged.join(existing, on=IDEM_COL, how="left_anti")
+        # the join moves its key to the front: select the staged order
+        # back, or each append after the first writes a different order
+        staged = staged.join(existing, on=IDEM_COL, how="left_anti").select(
+            *staged.columns
+        )
     appended = staged.count()
-    staged.write.mode("append").partitionBy(PARTITION_COL).parquet(path)
+    with recording_write(spark, path, staged.schema, (PARTITION_COL,)):
+        staged.write.mode("append").partitionBy(PARTITION_COL).parquet(path)
     return IngestResult(appended=appended, deduped=before - appended)
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 # ---------------------------------------------------------------------------
@@ -139,7 +150,8 @@ def to_rawstore(
     """Shape arbitrary line data into the rawstore schema: ``_raw`` is
     the untouched event text, ``_time`` the event time (defaulted to
     ingest time, like the rawstore column DEFAULT now64(3)),
-    ``_index_time`` always ingest time."""
+    ``_index_time`` always ingest time.  An ``_idem`` column of
+    ``lines`` is carried through."""
     out = lines.withColumn("_raw", F.col(raw_col).cast("string"))
     if time_col and time_col in lines.columns:
         out = out.withColumn(TIME_COL, F.col(time_col).cast("timestamp"))
@@ -152,6 +164,7 @@ def to_rawstore(
         F.lit(sourcetype).alias("sourcetype"),
         F.lit(source).alias("source"),
         F.lit(host).alias("host"),
+        *([IDEM_COL] if IDEM_COL in lines.columns else []),
     )
 
 
@@ -161,19 +174,37 @@ def ingest_rawstore(
     raw_col: str = "value",
     time_col: str | None = None,
     granularity: str = "D",
+    idem_col: str | None = None,
     **source_coords,
 ) -> IngestResult:
     """Rawstore ingest = shape to the fixed schema + the standard
-    idempotent partitioned append (the ``_raw`` content hash is the
-    idempotent key, so replaying the same log file is a no-op)."""
+    idempotent partitioned append.
+
+    The idempotent key is the caller's ``idem_col`` when given, as the
+    reference takes one from the client per block
+    (StorageDistributedMergeTree.cpp:1080-1196).  Without one it hashes
+    ``_raw``, the caller's event time when ``time_col`` is given, and the
+    line's occurrence number among equal lines in the batch: identical
+    lines in one batch are separate events and all land, and a replay of
+    the batch appends nothing.  A defaulted ``_time`` and ``_index_time``
+    are not hashed, because both are the ingest time and differ on every
+    replay; the source coordinates are not either, so a replay through
+    another source or host is still a replay.
+
+    Limits of the content key: an equal line sent again in a later batch
+    counts as a replay, and the existing-key check reads only the
+    partitions the batch touches, so a replay whose defaulted ``_time``
+    lands in a later partition than the first send (past midnight for
+    ``D``) is appended again.  A caller key avoids the first."""
+    if idem_col:
+        lines = lines.withColumn(IDEM_COL, F.col(idem_col).cast("string"))
     shaped = to_rawstore(lines, raw_col, time_col, **source_coords)
-    # hash only the event content + time: _index_time changes per replay
-    shaped = shaped.withColumn(
-        IDEM_COL,
-        F.sha2(
-            F.concat_ws("\x1f", F.col("_raw"), F.col(TIME_COL).cast("string")), 256
-        ),
-    )
+    if not idem_col:
+        event_time = time_col and time_col in lines.columns
+        content = ["_raw"] + ([TIME_COL] if event_time else [])
+        nth = F.row_number().over(Window.partitionBy(*content).orderBy("_raw"))
+        key = F.struct(*content, nth.alias("n"))
+        shaped = shaped.withColumn(IDEM_COL, F.sha2(F.to_json(key), 256))
     return ingest_batch(shaped, path, granularity=granularity)
 
 
@@ -188,7 +219,7 @@ def search_rawstore(
     contract (`_time` predicate injection, AddTimeParamVisitor.cpp:84-119)
     applied to raw events. The ``_part`` partition filter prunes files
     before the ``_raw`` scan."""
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     if start_time is not None:
         df = df.filter(F.col(TIME_COL) >= F.lit(start_time).cast("timestamp"))
     if end_time is not None:

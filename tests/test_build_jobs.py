@@ -1,0 +1,42 @@
+"""Building a registry query starts no Spark job once its tables' schemas
+are known to the session: the schema resolver (catalog.read_parquet)
+serves every parquet read of a second build from its per-session map."""
+
+from __future__ import annotations
+
+import pytest
+
+from daisy_spark.queries import QUERIES
+
+#: builders that start jobs by design, with the reason
+EAGER_BUILDERS = {
+    # the Newton fit of the coefficients runs while the query is built
+    "logistic_regression",
+}
+
+
+def _build_jobs(spark, name: str, sf_dir: str) -> int:
+    sc = spark.sparkContext
+    gid = f"build-jobs:{name}"
+    sc.setJobGroup(gid, gid)
+    try:
+        QUERIES[name](spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the listener bus: drain it, or a job
+    # that just ran may not be counted yet
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+@pytest.mark.parametrize("name", sorted(set(QUERIES) - EAGER_BUILDERS))
+def test_second_build_starts_no_job(name, spark, sf_dir):
+    QUERIES[name](spark, sf_dir)
+    assert _build_jobs(spark, name, sf_dir) == 0
+
+
+@pytest.mark.parametrize("name", sorted(EAGER_BUILDERS))
+def test_eager_builder_still_starts_jobs(name, spark, sf_dir):
+    # an allow-listed builder that became lazy must leave the list
+    QUERIES[name](spark, sf_dir)
+    assert _build_jobs(spark, name, sf_dir) > 0

@@ -59,6 +59,40 @@ def test_batch_ingest_replay_without_time_column(spark, tmp_path):
     assert ST.read_table(spark, sink).count() == 2
 
 
+def test_rawstore_replay_without_time_column(spark, tmp_path):
+    # _time defaults to the ingest time, so the key must leave it out
+    sink = str(tmp_path / "raw")
+    lines = spark.createDataFrame([("a=1",), ("b=2",)], "value STRING")
+    r1 = ST.ingest_rawstore(lines, sink)
+    assert r1.appended == 2 and r1.deduped == 0
+    time.sleep(1.1)
+    r2 = ST.ingest_rawstore(lines, sink)
+    assert r2.appended == 0 and r2.deduped == 2
+    assert ST.read_table(spark, sink).count() == 2
+
+
+def test_rawstore_identical_lines_in_one_batch_all_land(spark, tmp_path):
+    sink = str(tmp_path / "raw")
+    lines = spark.createDataFrame([("x",), ("x",), ("y",)], "value STRING")
+    r1 = ST.ingest_rawstore(lines, sink)
+    assert r1.appended == 3 and r1.deduped == 0
+    got = sorted(r._raw for r in ST.search_rawstore(spark, sink).collect())
+    assert got == ["x", "x", "y"]
+    # a replay adds nothing; one more copy of a line is a new event
+    assert ST.ingest_rawstore(lines, sink).appended == 0
+    more = spark.createDataFrame([("x",), ("x",), ("x",)], "value STRING")
+    assert ST.ingest_rawstore(more, sink).appended == 1
+
+
+def test_rawstore_caller_key(spark, tmp_path):
+    sink = str(tmp_path / "raw")
+    lines = spark.createDataFrame([(1, "x"), (2, "x")], "id LONG, value STRING")
+    assert ST.ingest_rawstore(lines, sink, idem_col="id").appended == 2
+    again = spark.createDataFrame([(2, "x"), (3, "z")], "id LONG, value STRING")
+    assert ST.ingest_rawstore(again, sink, idem_col="id").appended == 1
+    assert sorted(r._idem for r in ST.read_table(spark, sink).collect()) == ["1", "2", "3"]
+
+
 def test_stream_ingest_dedup_and_restart(spark, tmp_path):
     src = tmp_path / "src"
     src.mkdir()
