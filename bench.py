@@ -2,24 +2,21 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints one
 JSON line: {"metric": ..., "value": hot_total_sec, "unit": "sec",
-"queries": {name: hot_sec}, "sf": ..., "geomean": ..., "cold": {...}}.
+"queries": {name: hot_sec}, "sf": ..., "geomean": ..., "cold_total": ...}.
 
 Each query runs twice; the reported timing is the HOT (second) run, so
 the number compares like-for-like with the reference baseline's hot
 timings (BASELINE.md) instead of folding Spark's one-time JIT/codegen
-cost into every query.
+cost into every query.  The cold run is the first of the two and is
+summed into "cold_total".
 
-Timed action (r13 measurement fix, optimization guide §1.4): the HOT
-run writes to the NOOP SINK, which evaluates every output column.  The
-previous `df.count()` action let Catalyst PRUNE row-preserving final
-projections — for per-document/per-row metric queries (text_stats,
-lang_fingerprint, window families) the timed plan degenerated to
-counting scan rows and the query's actual compute never ran (measured
-up to ~40x under-timing at the sf1 lane; see
-plans/r13/prune_audit.json and OPTIMIZATION_r13.md).  The old
-count-based hot series is STILL measured and reported verbatim under
-"queries_count_method" so round-over-round comparisons against
-pre-r13 artifacts stay apples-to-apples.
+Timed action: both runs write to the NOOP SINK, which evaluates every
+output column.  A ``df.count()`` action lets Catalyst prune
+row-preserving final projections, so per-document/per-row metric
+queries (text_stats, lang_fingerprint, window families) would time a
+scan-row count instead of their compute (measured up to ~40x
+under-timing at the sf1 lane; plans/r13/prune_audit.json and
+OPTIMIZATION_r13.md).
 """
 
 from __future__ import annotations
@@ -30,8 +27,11 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+sys.path.append(os.path.join(ROOT, "tools"))
 
+from bench_one import noop_s  # noqa: E402
 from daisy_spark.catalog import build_bucketed_mirror  # noqa: E402
 from daisy_spark.queries import QUERIES  # noqa: E402
 from daisy_spark.session import get_spark  # noqa: E402
@@ -98,44 +98,55 @@ def _sf1_lane(spark, src_dir: str, budget_s: float) -> dict:
     if os.environ.get("SPARK_GRAFT_BUCKET", "1") != "0":
         build_bucketed_mirror(spark, dst)
     out["gen_sec"] = round(time.perf_counter() - t_start, 2)
-    out["queries_count_method"] = {}
     for name in SF1_QUERIES:
         if name not in QUERIES:
             continue
         if time.perf_counter() - t_start > budget_s:
             out["errors"]["_budget"] = f"stopped after {budget_s}s"
             break
-        spark.catalog.clearCache()
         try:
-            QUERIES[name](spark, dst).count()  # cold/JIT
-            t1 = time.perf_counter()
-            QUERIES[name](spark, dst).count()
-            out["queries_count_method"][name] = round(
-                time.perf_counter() - t1, 4
+            noop_s(spark, f"sf1 {name}: cold", lambda: QUERIES[name](spark, dst))
+            out["queries"][name] = round(
+                noop_s(spark, f"sf1 {name}: hot", lambda: QUERIES[name](spark, dst)), 4
             )
-            # noop sink evaluates every output column (§1.4) — warm its
-            # (differently-pruned) plan once, then time it hot
-            QUERIES[name](spark, dst).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            spark.catalog.clearCache()
-            t2 = time.perf_counter()
-            QUERIES[name](spark, dst).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            out["queries"][name] = round(time.perf_counter() - t2, 4)
         except Exception as exc:  # noqa: BLE001
             out["errors"][name] = f"{type(exc).__name__}: {exc}"[:200]
     if out["queries"]:
-        out["geomean"] = round(
-            math.exp(
-                sum(math.log(max(t, 1e-4)) for t in out["queries"].values())
-                / len(out["queries"])
-            ),
-            4,
-        )
+        out["geomean"] = _geomean(out["queries"])
         out["total"] = round(sum(out["queries"].values()), 4)
     return out
+
+
+def _geomean(times: dict[str, float]) -> float:
+    return round(
+        math.exp(
+            sum(math.log(max(t, 1e-4)) for t in times.values()) / max(len(times), 1)
+        ),
+        4,
+    )
+
+
+def bench_record(
+    hot: dict[str, float],
+    cold: dict[str, float],
+    errors: dict[str, str],
+    sf: str,
+    sf1: dict,
+) -> dict:
+    """The JSON line bench.py prints: the hot noop-sink series under
+    ``queries`` and the cold runs' sum under ``cold_total``."""
+    return {
+        "metric": "headline_queries_hot_total",
+        "value": round(sum(hot.values()), 4),
+        "unit": "sec",
+        "queries": hot,
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "geomean": _geomean(hot),
+        "cold_total": round(sum(cold.values()), 4),
+        "n_queries": len(hot),
+        "errors": errors,
+        "sf1": sf1,
+    }
 
 
 def main() -> None:
@@ -145,7 +156,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     # warm the JVM + parquet footers once with the cheapest query
-    QUERIES["revenue_forecast"](spark, sf_dir).collect()
+    noop_s(spark, "warm: revenue_forecast", lambda: QUERIES["revenue_forecast"](spark, sf_dir))
 
     # rotation-robust warm-up (VERDICT r5 item 5): the registry order
     # rotates per round, and whoever runs first pays the one-time
@@ -163,7 +174,7 @@ def main() -> None:
     ):
         if _warm in QUERIES:
             try:
-                QUERIES[_warm](spark, sf_dir).count()
+                noop_s(spark, f"warm: {_warm}", lambda: QUERIES[_warm](spark, sf_dir))
             except Exception:  # noqa: BLE001
                 pass
 
@@ -175,71 +186,25 @@ def main() -> None:
         build_bucketed_mirror(spark, sf_dir)
 
     hot: dict[str, float] = {}
-    hot_count: dict[str, float] = {}
     cold: dict[str, float] = {}
     errors: dict[str, str] = {}
     for name, fn in QUERIES.items():
-        # bound memory: operators that persist() intermediates would
-        # otherwise accumulate across the suite
-        spark.catalog.clearCache()
         # one broken query must never zero the whole artifact: record the
-        # failure and keep timing the rest
+        # failure and keep timing the rest.  noop_s clears the cache
+        # before each run, which bounds memory: operators that persist()
+        # intermediates would otherwise accumulate across the suite
         try:
-            t0 = time.perf_counter()
-            assert fn(spark, sf_dir).count() >= 0
-            cold[name] = round(time.perf_counter() - t0, 4)
-            t1 = time.perf_counter()
-            assert fn(spark, sf_dir).count() >= 0
-            hot_count[name] = round(time.perf_counter() - t1, 4)
-            # r13 fix (§1.4): the primary hot timing uses the noop sink,
-            # which evaluates every output column where count() prunes
-            # row-preserving final projections.  Warm the noop plan once
-            # (its pruning differs from count's, so it JIT/codegens
-            # separately), then time it hot.
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            spark.catalog.clearCache()
-            t2 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            hot[name] = round(time.perf_counter() - t2, 4)
+            cold[name] = round(noop_s(spark, f"{name}: cold", lambda: fn(spark, sf_dir)), 4)
+            hot[name] = round(noop_s(spark, f"{name}: hot", lambda: fn(spark, sf_dir)), 4)
         except Exception as exc:  # noqa: BLE001
             errors[name] = f"{type(exc).__name__}: {exc}"[:400]
-    total = round(sum(hot.values()), 4)
-    geomean = round(
-        math.exp(sum(math.log(max(t, 1e-4)) for t in hot.values()) / max(len(hot), 1)),
-        4,
-    )
     # amortized sf1 lane (VERDICT r3 item 5): ~6M-row lineitem puts the
     # scan-heavy queries at the baseline's 10M tier where job overhead
     # stops dominating; SPARK_GRAFT_SF1=0 disables
     sf1: dict = {}
     if os.environ.get("SPARK_GRAFT_SF1", "1") != "0" and sf == "0.1":
         sf1 = _sf1_lane(spark, sf_dir, budget_s=360.0)
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_hot_total",
-                "value": total,
-                "unit": "sec",
-                "queries": hot,
-                "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-                "geomean": geomean,
-                # legacy count()-action hot series, unchanged methodology
-                # vs pre-r13 artifacts (see module docstring)
-                "queries_count_method": hot_count,
-                "geomean_count_method": round(
-                    math.exp(
-                        sum(math.log(max(t, 1e-4)) for t in hot_count.values())
-                        / max(len(hot_count), 1)
-                    ),
-                    4,
-                ),
-                "cold_total": round(sum(cold.values()), 4),
-                "n_queries": len(hot),
-                "errors": errors,
-                "sf1": sf1,
-            }
-        )
-    )
+    print(json.dumps(bench_record(hot, cold, errors, sf, sf1)))
     spark.stop()
 
 

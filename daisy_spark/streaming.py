@@ -13,7 +13,13 @@ Spark-first mapping:
 
 - batch ingest      = DataFrame -> partitioned parquet append, with an
                       anti-join against already-ingested ``_idem`` keys
-                      (exactly-once on replay, the reference's contract);
+                      (exactly-once on replay, the reference's contract),
+                      in two Spark actions: a count per partition (the
+                      partitions to read keys from, and rows in) and the
+                      write, whose rows appended come from an
+                      ``Observation`` of the written plan, as Structured
+                      Streaming reports what a write did from the
+                      execution itself;
 - streaming ingest  = readStream -> withWatermark + dropDuplicates on the
                       idempotent key (Spark's state store plays the role
                       of the reference's in-memory key index, with the
@@ -29,7 +35,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from daisy_spark.catalog import read_parquet, recording_write
@@ -83,6 +89,15 @@ def with_ingest_columns(
 class IngestResult:
     appended: int
     deduped: int
+    #: the sorted ``_part`` values the batch touched, replays included
+    partitions: list
+
+
+def partition_counts(staged: DataFrame) -> DataFrame:
+    """Rows per ``_part`` of a staged batch: the first of an ingest's two
+    actions.  Only ``_part`` is read, so Catalyst prunes what the key
+    needs (the rawstore occurrence-number window) out of this plan."""
+    return staged.groupBy(PARTITION_COL).count()
 
 
 def ingest_batch(
@@ -96,9 +111,17 @@ def ingest_batch(
     present in the sink (replay-safe, the reference's idempotent-commit
     contract), dedup within the batch, then append partitioned parquet.
 
-    Scale shape: the existing-keys read prunes to the partitions the
-    incoming batch touches (partition filter on ``_part``), and the
-    anti-join shuffles on the key — no full-sink scan.
+    Two Spark actions:
+
+    - a count per ``_part`` (:func:`partition_counts`) gives the
+      partitions the batch touches, which prune the existing-key read,
+      and rows in, their sum;
+    - the write: in-batch dedup, an anti-join on the key against the
+      existing keys of those partitions (no full-sink scan), and the
+      partitioned append.  An ``Observation`` at the root of the written
+      plan counts the rows appended.  It must stay at the root: one below
+      an exchange is lost when AQE cuts out an empty branch (a full
+      replay), and ``Observation.get`` then fails.
 
     Every append writes its columns in the staged order, and the append
     is recorded with the session's schema resolver, so the searches that
@@ -106,10 +129,11 @@ def ingest_batch(
     """
     spark = df.sparkSession
     staged = with_ingest_columns(df, time_col, idem_col, granularity)
-    before = staged.count()
-    staged = staged.dropDuplicates([IDEM_COL])
+    counts = partition_counts(staged).collect()
+    # a null _time gives a null partition: sort it last
+    parts = sorted((r[0] for r in counts), key=lambda p: (p is None, p))
+    out = staged.dropDuplicates([IDEM_COL])
     if os.path.exists(path):
-        parts = [r[0] for r in staged.select(PARTITION_COL).distinct().collect()]
         existing = (
             read_parquet(spark, path)
             .filter(F.col(PARTITION_COL).isin(parts))
@@ -117,13 +141,18 @@ def ingest_batch(
         )
         # the join moves its key to the front: select the staged order
         # back, or each append after the first writes a different order
-        staged = staged.join(existing, on=IDEM_COL, how="left_anti").select(
+        out = out.join(existing, on=IDEM_COL, how="left_anti").select(
             *staged.columns
         )
-    appended = staged.count()
+    written = Observation()
+    out = out.observe(written, F.count(F.lit(1)).alias("rows"))
     with recording_write(spark, path, staged.schema, (PARTITION_COL,)):
-        staged.write.mode("append").partitionBy(PARTITION_COL).parquet(path)
-    return IngestResult(appended=appended, deduped=before - appended)
+        out.write.mode("append").partitionBy(PARTITION_COL).parquet(path)
+    appended = written.get["rows"]
+    rows_in = sum(r[1] for r in counts)
+    return IngestResult(
+        appended=appended, deduped=rows_in - appended, partitions=parts
+    )
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
@@ -178,7 +207,8 @@ def ingest_rawstore(
     **source_coords,
 ) -> IngestResult:
     """Rawstore ingest = shape to the fixed schema + the standard
-    idempotent partitioned append.
+    idempotent partitioned append (:func:`ingest_batch`, whose two
+    actions give the counts).
 
     The idempotent key is the caller's ``idem_col`` when given, as the
     reference takes one from the client per block
@@ -195,7 +225,11 @@ def ingest_rawstore(
     counts as a replay, and the existing-key check reads only the
     partitions the batch touches, so a replay whose defaulted ``_time``
     lands in a later partition than the first send (past midnight for
-    ``D``) is appended again.  A caller key avoids the first."""
+    ``D``) is appended again.  A caller key avoids the first.
+
+    The occurrence-number window runs once, in the write: the count per
+    partition reads only ``_part``, and Catalyst prunes the window out of
+    that plan."""
     if idem_col:
         lines = lines.withColumn(IDEM_COL, F.col(idem_col).cast("string"))
     shaped = to_rawstore(lines, raw_col, time_col, **source_coords)

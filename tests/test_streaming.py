@@ -184,3 +184,140 @@ def test_rawstore_ingest_and_search(spark, tmp_path):
     assert hits[0]["sourcetype"] == "syslog" and hits[0]["host"] == "h1"
     all_err = ST.search_rawstore(spark, sink, pattern="ERROR").collect()
     assert len(all_err) == 2
+
+
+# ---------------------------------------------------------------------------
+# Counts from the two ingest actions: the per-partition count gives rows in
+# and the partitions, the Observation at the root of the write gives rows
+# appended.  These inputs empty a branch of the written plan, where an
+# observation below an exchange would be lost.
+# ---------------------------------------------------------------------------
+
+
+def _events(spark, rows):
+    return spark.createDataFrame(
+        rows, "_idem STRING, v LONG, _time STRING"
+    ).withColumn("_time", F.col("_time").cast("timestamp"))
+
+
+_ROWS = [
+    ("a", 1, "2024-01-01 00:00:00"),
+    ("b", 2, "2024-01-02 00:00:00"),
+    ("c", 3, "2024-01-02 05:00:00"),
+]
+
+
+def test_full_replay_counts(spark, tmp_path):
+    sink = str(tmp_path / "tbl")
+    df = _events(spark, _ROWS)
+    r1 = ST.ingest_batch(df, sink)
+    assert (r1.appended, r1.deduped) == (3, 0)
+    assert r1.partitions == [20240101, 20240102]
+    r2 = ST.ingest_batch(df, sink)
+    assert (r2.appended, r2.deduped) == (0, 3)
+    assert r2.partitions == [20240101, 20240102]
+    assert ST.read_table(spark, sink).count() == 3
+
+
+def test_empty_batch_counts(spark, tmp_path):
+    sink = str(tmp_path / "tbl")
+    ST.ingest_batch(_events(spark, _ROWS), sink)
+    empty = _events(spark, [])
+    into_existing = ST.ingest_batch(empty, sink)
+    assert (into_existing.appended, into_existing.deduped) == (0, 0)
+    assert into_existing.partitions == []
+    into_new = ST.ingest_batch(empty, str(tmp_path / "new"))
+    assert (into_new.appended, into_new.deduped) == (0, 0)
+    assert into_new.partitions == []
+    assert ST.read_table(spark, sink).count() == 3
+
+
+def test_in_batch_duplicates_with_replayed_keys(spark, tmp_path):
+    sink = str(tmp_path / "tbl")
+    ST.ingest_batch(_events(spark, _ROWS), sink)
+    mixed = _events(spark, [
+        ("a", 1, "2024-01-01 00:00:00"),   # replayed
+        ("d", 4, "2024-01-03 00:00:00"),   # new, sent twice
+        ("d", 4, "2024-01-03 00:00:00"),
+        ("e", 5, "2024-01-03 01:00:00"),   # new
+    ])
+    r = ST.ingest_batch(mixed, sink)
+    assert (r.appended, r.deduped) == (2, 2)
+    assert r.partitions == [20240101, 20240103]
+    got = sorted(row._idem for row in ST.read_table(spark, sink).collect())
+    assert got == ["a", "b", "c", "d", "e"]
+
+
+def test_null_time_partition_sorts_last(spark, tmp_path):
+    sink = str(tmp_path / "tbl")
+    df = _events(spark, [("a", 1, "2024-01-01 00:00:00"), ("b", 2, None)])
+    r = ST.ingest_batch(df, sink)
+    assert (r.appended, r.deduped) == (2, 0)
+    assert r.partitions == [20240101, None]
+
+
+def test_rawstore_full_replay_counts(spark, tmp_path):
+    sink = str(tmp_path / "raw")
+    lines = spark.createDataFrame(
+        [("2024-03-01 10:00:00", "x"), ("2024-03-01 10:00:00", "x"),
+         ("2024-03-02 09:30:00", "y")],
+        "ts STRING, value STRING",
+    )
+    r1 = ST.ingest_rawstore(lines, sink, time_col="ts")
+    assert (r1.appended, r1.deduped) == (3, 0)
+    r2 = ST.ingest_rawstore(lines, sink, time_col="ts")
+    assert (r2.appended, r2.deduped) == (0, 3)
+    assert r2.partitions == [20240301, 20240302]
+
+
+def test_rawstore_count_plan_has_no_window(spark, tmp_path, monkeypatch):
+    # the occurrence-number window only feeds _idem: the count per
+    # partition must not pay its exchange, only the write does
+    plans = []
+    real = ST.partition_counts
+
+    def recording(staged):
+        counts = real(staged)
+        plans.append((staged, counts))
+        return counts
+
+    monkeypatch.setattr(ST, "partition_counts", recording)
+    lines = spark.createDataFrame([("x",), ("x",), ("y",)], "value STRING")
+    assert ST.ingest_rawstore(lines, str(tmp_path / "raw")).appended == 3
+    [(staged, counts)] = plans
+
+    def optimized(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    assert "Window" in optimized(staged)
+    assert "Window" not in optimized(counts)
+
+
+def _ingest_jobs(spark, fn) -> int:
+    sc = spark.sparkContext
+    gid = f"ingest-jobs:{time.monotonic_ns()}"
+    sc.setJobGroup(gid, gid)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the listener bus: drain it, or a job
+    # that just ran may not be counted yet
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_ingest_into_existing_sink_runs_at_most_six_jobs(spark, tmp_path):
+    # two actions: a count per partition and the observed write; the
+    # sink's schema is already known to the session, as after a search
+    sink, raw = str(tmp_path / "tbl"), str(tmp_path / "raw")
+    ST.ingest_batch(_events(spark, _ROWS[:2]), sink)
+    ST.read_table(spark, sink)
+    lines = spark.createDataFrame([("x",), ("y",)], "value STRING")
+    ST.ingest_rawstore(lines, raw)
+    ST.read_table(spark, raw)
+
+    batch = _ingest_jobs(spark, lambda: ST.ingest_batch(_events(spark, _ROWS), sink))
+    more = spark.createDataFrame([("x",), ("x",), ("z",)], "value STRING")
+    rawstore = _ingest_jobs(spark, lambda: ST.ingest_rawstore(more, raw))
+    assert 0 < batch <= 6 and 0 < rawstore <= 6, (batch, rawstore)

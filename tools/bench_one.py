@@ -6,10 +6,11 @@ df.write.format("noop") so the full computation (every column) is paid
 without driver-transfer cost.  Prints per-rep times + min/median.
 
 NOT the driver-contract bench (bench.py is); this is the measurement
-loop for optimization work.  :func:`hot_noop` is the one timing loop the
-other tools (ab_bench, scaling_sf1, profile_dedup_near) share, so this
-module imports ``daisy_spark`` only inside functions: a caller decides
-which tree is first on ``sys.path`` before it calls in.
+loop for optimization work.  :func:`noop_s` is the one timing primitive:
+bench.py calls it directly, the other tools (ab_bench, scaling_sf1,
+profile_dedup_near) through :func:`hot_noop`.  This module imports
+``daisy_spark`` only inside functions: a caller decides which tree is
+first on ``sys.path`` before it calls in.
 """
 
 from __future__ import annotations
@@ -37,21 +38,25 @@ def hot_session(app: str, sf_dir: str):
     return spark
 
 
-def hot_noop(spark, label: str, df_fn, reps: int) -> list[float]:
-    """Seconds per rep of writing ``df_fn()`` to the noop sink: one warm
-    run, then ``reps`` timed runs, each after ``clearCache``."""
+def noop_s(spark, label: str, df_fn) -> float:
+    """Seconds to build ``df_fn()`` and write it to the noop sink, after
+    ``clearCache``; its jobs carry ``label`` as their description."""
     sc = spark.sparkContext
-    ts: list[float] = []
+    spark.catalog.clearCache()
+    sc.setJobDescription(label)
     try:
-        for tag in ["warm"] + [f"rep{i}" for i in range(reps)]:
-            spark.catalog.clearCache()
-            sc.setJobDescription(f"{label}: {tag}")
-            t0 = time.perf_counter()
-            df_fn().write.format("noop").mode("overwrite").save()
-            ts.append(time.perf_counter() - t0)
-        return ts[1:]
+        t0 = time.perf_counter()
+        df_fn().write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0
     finally:
         sc.setJobDescription(None)
+
+
+def hot_noop(spark, label: str, df_fn, reps: int) -> list[float]:
+    """Seconds per rep of writing ``df_fn()`` to the noop sink: one warm
+    run, then ``reps`` timed runs (:func:`noop_s`)."""
+    noop_s(spark, f"{label}: warm", df_fn)
+    return [noop_s(spark, f"{label}: rep{i}", df_fn) for i in range(reps)]
 
 
 def main() -> None:
