@@ -359,7 +359,6 @@ class _ExprParser:
             return Func("lambda", [Func("tuple", [x]), body])
         if p.peek() == "(":
             # try (a, b) ->
-            depth = 0
             j = p.i
             ok = True
             names = []
@@ -849,14 +848,6 @@ def _parse_union_element(p: _P) -> "Select | Union":
             return u.children[0]
         return u
     return parse_select(p)
-
-
-_CLAUSE_END = {
-    "FROM", "WHERE", "PREWHERE", "GROUP", "ORDER", "HAVING", "LIMIT",
-    "OFFSET", "SETTINGS", "UNION", ")", "", "WITH", "ARRAY", "LEFT",
-    "INNER", "RIGHT", "FULL", "CROSS", "JOIN", "ANY", "ALL", "ASOF",
-    "SEMI", "ANTI", "GLOBAL", "USING", "ON", "FINAL", "SAMPLE", "BY",
-}
 
 
 def parse_select(p: _P) -> Select:
@@ -1446,7 +1437,7 @@ def _walk_selects(u: "Union | Select"):
 def _walk_exprs(sel: Select):
     yield from sel.with_items
     yield from sel.items
-    for js, te in sel.tables:
+    for js, _ in sel.tables:
         if js:
             if js.on is not None:
                 yield js.on
@@ -1506,7 +1497,7 @@ def _expr_tables(n: Node, tbls: list[_Tbl]) -> set[int]:
 def _cross_to_inner(sel: Select, tbls: list[_Tbl]) -> None:
     if len(sel.tables) != 2 or sel.where is None:
         return
-    js, te = sel.tables[1]
+    js, _ = sel.tables[1]
     if js is None or js.kind not in ("comma", "cross") or js.on or js.using:
         return
     conjuncts = (
@@ -2779,7 +2770,6 @@ def format_select(sel: Select, st: _Fmt, indent: int) -> str:
     lines += _fmt_item_list(items, head, pad)
     if sel.tables:
         from_line = pad + "FROM"
-        first = True
         for js, te in sel.tables:
             if js is not None:
                 if js.kind == "comma":
@@ -2833,7 +2823,6 @@ def format_select(sel: Select, st: _Fmt, indent: int) -> str:
                     from_line += " ON " + format_expr(
                         js.on, st, indent, False
                     )
-            first = False
         lines.append(from_line)
     if sel.array_join:
         aj = sel.array_join

@@ -23,8 +23,6 @@ _P3 = np.uint64(0x165667B19E3779F9)
 _P4 = np.uint64(0x85EBCA77C2B2AE63)
 _P5 = np.uint64(0x27D4EB2F165667C5)
 
-_SPARK_SEED = np.uint64(42)
-
 
 def _rotl(x: np.ndarray, r: int) -> np.ndarray:
     r_ = np.uint64(r)

@@ -18,6 +18,7 @@ the reference dropping whole parts past TTL).
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 import shutil
 from dataclasses import dataclass
@@ -59,6 +60,34 @@ def _atomic_rewrite(spark: SparkSession, path: str, df: DataFrame) -> None:
     shutil.rmtree(backup)
 
 
+#: ``_part`` digit count -> (format, period length) of the granularities
+#: in streaming.GRANULARITY_EXPRS; a month (None) has no fixed length
+_PART_PERIODS = {
+    6: ("%Y%m", None),
+    8: ("%Y%m%d", dt.timedelta(days=1)),
+    10: ("%Y%m%d%H", dt.timedelta(hours=1)),
+    12: ("%Y%m%d%H%M", dt.timedelta(minutes=1)),
+}
+
+
+def _partition_end(value: str) -> dt.datetime | None:
+    """End (exclusive, session wall clock) of the period a ``_part``
+    value covers; None for a value no granularity writes (e.g. the null
+    partition)."""
+    fmt, step = _PART_PERIODS.get(len(value), (None, None))
+    if fmt is None or not value.isdigit():
+        return None
+    try:
+        start = dt.datetime.strptime(value, fmt)
+    except ValueError:
+        return None
+    if step is None:
+        return start.replace(
+            year=start.year + start.month // 12, month=start.month % 12 + 1
+        )
+    return start + step
+
+
 def apply_ttl(
     spark: SparkSession,
     path: str,
@@ -68,9 +97,10 @@ def apply_ttl(
     """Drop rows whose ``time_col`` is older than the cutoff.
 
     When the table is partitioned on the ingest granularity column
-    (streaming.PARTITION_COL, day-level ints), whole expired partition
-    DIRECTORIES are deleted without reading a row — the scan+rewrite
-    fallback only runs for the single boundary partition.
+    (streaming.PARTITION_COL, any of M/D/H/m), a partition DIRECTORY
+    whose whole period ends on or before the cutoff is deleted without
+    reading a row — the scan+rewrite fallback only runs for the
+    partition the cutoff falls in.
     """
     df = read_parquet(spark, path)
     cutoff = F.lit(older_than).cast("timestamp")
@@ -78,21 +108,26 @@ def apply_ttl(
 
     dropped_dirs = 0
     if PARTITION_COL in df.columns:
-        cutoff_day = (
+        # the cutoff on the wall clock the partition values were
+        # formatted in (the session time zone), truncated to the second
+        cutoff_wall = dt.datetime.strptime(
             spark.range(1)
-            .select(F.date_format(cutoff, "yyyyMMdd").cast("int").alias("d"))
+            .select(F.date_format(cutoff, "yyyyMMddHHmmss").alias("c"))
             .collect()[0]
-            .d
+            .c,
+            "%Y%m%d%H%M%S",
         )
+        kept = 0
         for entry in list(os.listdir(path)):
             if entry.startswith(f"{PARTITION_COL}="):
-                try:
-                    part = int(entry.split("=", 1)[1])
-                except ValueError:
-                    continue
-                if part < cutoff_day:  # strictly before the cutoff's day
+                end = _partition_end(entry.split("=", 1)[1])
+                if end is not None and end <= cutoff_wall:
                     shutil.rmtree(os.path.join(path, entry))
                     dropped_dirs += 1
+                else:
+                    kept += 1
+        if not kept:
+            return MaintenanceResult(before, 0, dropped_dirs)
         df = read_parquet(spark, path)
 
     remaining_expired = df.filter(F.col(time_col) < cutoff).limit(1).count()

@@ -24,6 +24,12 @@ token-level rewriter, not a full parser:
 - everything else passes through untouched, so Catalyst sees ordinary
   Spark SQL and all pushdown/pruning/join planning applies.
 
+translate() parses a statement once, and SETTINGS travel with that
+parse: they are collected per top-level SELECT (each UNION part, each
+pipe stage), a later part's key wins, and a WITH query's settings are
+its body's.  Those of a subquery or of a parenthesized UNION part
+are not returned.
+
 Also lowered in SQL (each corpus-tested against the reference's own
 stateless tests): ASOF JOIN (scale-safe union+window plan; correlated
 lateral only as the multi-join-left fallback), ANY JOIN (right-dedup),
@@ -392,9 +398,10 @@ def _raise_dialect(msg: str):
 
 def _sleep_then_zero(arg: str) -> str:
     """sleep(n): a real capped wait — data inserted with now() must age
-    relative to a later query's now() (00746).  The per-statement guard
-    keeps re-translations (alias passes retry) from multiplying the
-    wait."""
+    relative to a later query's now() (00746).  translate() makes one
+    pass, but within it an ORDER BY item that names a select alias or
+    repeats the call translates sleep() again; the per-statement guard
+    (reset by ``sql()``) keeps those from multiplying the wait."""
     import time
 
     if _SLEPT_CTX.get():
@@ -2063,10 +2070,6 @@ def _array_reduce_expr(a: list[str]) -> str:
     if name in ("stddevSamp", "stddevPop", "varSamp", "varPop"):
         n = f"CAST(size({arr}) AS DOUBLE)"
         s1 = f"aggregate({arr}, CAST(0 AS DOUBLE), (__a, __x) -> __a + __x)"
-        s2 = (
-            f"aggregate({arr}, CAST(0 AS DOUBLE), "
-            f"(__a, __x) -> __a + CAST(__x AS DOUBLE) * __x)"
-        )
         mu = f"(({s1}) / {n})"
         ss = (
             f"aggregate({arr}, CAST(0 AS DOUBLE), "
@@ -7640,11 +7643,6 @@ PARAMETRIC_MAP: dict[str, object] = {
     "histogram": _histogram_expr,
 }
 
-#: recognizably-reference functions with NO sound SQL translation; the
-#: error points at the DataFrame-level implementation.
-UNSUPPORTED_FUNCS: dict[str, str] = {}
-
-
 # ---------------------------------------------------------------------------
 # Expression translation (recursive token walk)
 # ---------------------------------------------------------------------------
@@ -8387,7 +8385,7 @@ def _translate_expr(toks: list[str], in_list: bool = False) -> list[str]:
             if _is_query_tokens(inner):
                 tok_es = _EXPR_SUBQ_CTX.set(True)
                 try:
-                    out += ["(", _translate_query_text(inner), ")"]
+                    out += ["(", _translate_query(inner)[0], ")"]
                 finally:
                     _EXPR_SUBQ_CTX.reset(tok_es)
                 i = close + 1
@@ -9231,16 +9229,6 @@ def _translate_expr(toks: list[str], in_list: bool = False) -> list[str]:
                         out.append(f"any_value({args2[0]}, true)")
                         i = close2 + 1
                         continue
-                if t in UNSUPPORTED_FUNCS:
-                    raise DialectError(
-                        f"{t} has no single-expression Spark SQL form; "
-                        f"use {UNSUPPORTED_FUNCS[t]}"
-                    )
-            if t in UNSUPPORTED_FUNCS:
-                raise DialectError(
-                    f"{t} has no single-expression Spark SQL form; "
-                    f"use {UNSUPPORTED_FUNCS[t]}"
-                )
             # numbers(n) table function -> range TVF with the reference's
             # column name (system.numbers column is `number`);
             # numbers_mt is the multithreaded variant (same rows, no
@@ -11575,11 +11563,6 @@ def _date_cmp_pass(toks: list[str]) -> list[str]:
     return res
 
 
-_BOOL_LEFT_EDGE = {"(", ",", "AND", "OR", "NOT", "WHEN", "THEN", "ELSE",
-                   "SELECT", "WHERE", "HAVING"}
-_BOOL_RIGHT_EDGE = {")", ",", "AND", "OR", "AS", "THEN", "ELSE", "END"}
-
-
 #: depth-0 tokens that terminate an AND/OR operand span
 _BOOLIFY_STOP = {
     ",", "(", ")", "WHEN", "THEN", "ELSE", "END", "CASE", "SELECT",
@@ -11710,12 +11693,6 @@ def _boolify_logic_operands(toks: list[str]) -> list[str]:
 # ---------------------------------------------------------------------------
 # Clause-level rewriting
 # ---------------------------------------------------------------------------
-
-_CLAUSE_STARTS = [
-    ("GROUP", "BY"), ("ORDER", "BY"), ("LIMIT",), ("HAVING",), ("WHERE",),
-    ("PREWHERE",), ("FROM",), ("SETTINGS",), ("OFFSET",), ("WINDOW",),
-]
-
 
 @dataclass
 class _Select:
@@ -12034,7 +12011,7 @@ def _parse_select(toks: list[str]) -> _Select:
     # keep their FROM-derived types; two passes close alias-on-alias.
     env_sib = dict(_TYPE_ENV_CTX.get() or _TYPE_ENV_DEFAULT)
     grew_sib = False
-    for _pass in range(2):
+    for _ in range(2):
         for it in _split_top(q.select, ","):
             if len(it) >= 3 and _kw(it[-2]) == "AS" and _is_ident(it[-1]):
                 nm_sib = it[-1].strip('`"')
@@ -12771,7 +12748,11 @@ def _generate_random_tvf(args: list[str]) -> str:
     )
 
 
-_ASOF_COUNTER = [0]
+#: ASOF lowering's subquery-alias number, restarted by each translate()
+#: so the emitted text depends on the query alone
+_ASOF_SEQ: "contextvars.ContextVar[int]" = contextvars.ContextVar(
+    "daisy_asof_seq", default=0
+)
 
 
 def _is_query_tokens(inner: list[str]) -> bool:
@@ -12884,8 +12865,8 @@ def _asof_union_item(
     if not eqs or time is None:
         return False
     l_time, r_time, forward, strict = time
-    nid = _ASOF_COUNTER[0]
-    _ASOF_COUNTER[0] += 1
+    nid = _ASOF_SEQ.get()
+    _ASOF_SEQ.set(nid + 1)
     lk = ", ".join(f"{le} AS __k{x}" for x, (le, _) in enumerate(eqs))
     rk = ", ".join(re_ for _, re_ in eqs)
     # right rows sort BEFORE left at equal ts for the inclusive forms
@@ -12966,7 +12947,7 @@ def _translate_from(toks: list[str]) -> list[str]:
             if _is_query_tokens(inner):
                 tok_es = _EXPR_SUBQ_CTX.set(False)  # FROM position
                 try:
-                    out += ["(", _translate_query_text(inner), ")"]
+                    out += ["(", _translate_query(inner)[0], ")"]
                 finally:
                     _EXPR_SUBQ_CTX.reset(tok_es)
             else:
@@ -13277,7 +13258,7 @@ def _translate_from(toks: list[str]) -> list[str]:
                 fc = _match_paren(toks, k)
                 inner = toks[k + 1 : fc]
                 if _is_query_tokens(inner):
-                    factor_sql = "( " + _translate_query_text(inner) + " )"
+                    factor_sql = "( " + _translate_query(inner)[0] + " )"
                 else:
                     factor_sql = "( " + _emit(_translate_expr(inner)) + " )"
                 k = fc + 1
@@ -13571,7 +13552,7 @@ def _translate_from(toks: list[str]) -> list[str]:
                 fc = _match_paren(toks, k)
                 inner = toks[k + 1 : fc]
                 if _is_query_tokens(inner):
-                    rhs_sql = "( " + _translate_query_text(inner) + " )"
+                    rhs_sql = "( " + _translate_query(inner)[0] + " )"
                 else:
                     rhs_sql = "( " + _emit(_translate_expr(inner)) + " )"
                 k = fc + 1
@@ -14656,10 +14637,7 @@ def _order_by_sql(
         # strip trailing direction/nulls for type inference
         core = list(it)
         nulls_first = None
-        desc = False
         while core and _kw(core[-1]) in ("ASC", "DESC", "FIRST", "LAST", "NULLS"):
-            if _kw(core[-1]) == "DESC":
-                desc = True
             if _kw(core[-1]) == "FIRST":
                 nulls_first = True
             if _kw(core[-1]) == "LAST":
@@ -14882,7 +14860,6 @@ def _using_alias_rewrite(q: _Select) -> None:
     if not aliases:
         return
     # first FROM item: source tokens [+ AS alias], up to the first join kw
-    i = 0
     n = len(f)
     if f and f[0] == "(":
         src_end = _match_paren(f, 0) + 1
@@ -15300,9 +15277,9 @@ def _qualify_ambiguous(q: _Select) -> None:
     parts = _split_single_join(q.from_)
     if not parts:
         return
-    left, words, right, tail = parts
+    left, _, right, tail = parts
     lsrc, lalias = _item_src_alias(left)
-    rsrc, ralias = _item_src_alias(right)
+    rsrc, _ = _item_src_alias(right)
     if not lalias:
         return
     lcols = _from_item_cols(lsrc)
@@ -16147,7 +16124,7 @@ def _stream_order_join_rewrite(
 def _translate_select_tokens(toks: list[str]) -> tuple[str, dict[str, str]]:
     # fully parenthesized query part: ( SELECT ... )
     if toks and toks[0] == "(" and _match_paren(toks, 0) == len(toks) - 1:
-        return "( " + _translate_query_text(toks[1:-1]) + " )", {}
+        return "( " + _translate_query(toks[1:-1])[0] + " )", {}
     q = _parse_select(toks)
     # a FROM-less SELECT reads system.one implicitly in the reference;
     # materialize that when it actually references the `dummy` column
@@ -16321,7 +16298,7 @@ def _subq_cols(inner: list[str]) -> dict[str, str]:
                         "".join(nm9)
                     )
                     if schema9:
-                        for c9, _t9, d9 in schema9:
+                        for c9, _, d9 in schema9:
                             cols.setdefault(c9, d9)
             continue
         if len(item) >= 3 and _kw(item[-2]) == "AS" and _is_ident(item[-1]):
@@ -16914,16 +16891,18 @@ def _alias_subquery_outputs(toks: list[str]) -> list[str]:
     return toks[:start] + spliced + toks[end:]
 
 
-def _translate_query_text(toks: list[str]) -> str:
-    """UNION-aware, WITH-aware entry for a (sub)query token list."""
+def _translate_query(toks: list[str]) -> tuple[str, dict[str, str]]:
+    """UNION-aware, WITH-aware entry for a (sub)query token list: the
+    Spark SQL and the SETTINGS of its top-level SELECTs (a later UNION
+    part's key wins; a WITH query's are its body's)."""
     tok_d = _QDEPTH.set(_QDEPTH.get() + 1)
     try:
-        return _translate_query_text_inner(toks)
+        return _translate_query_inner(toks)
     finally:
         _QDEPTH.reset(tok_d)
 
 
-def _translate_query_text_inner(toks: list[str]) -> str:
+def _translate_query_inner(toks: list[str]) -> tuple[str, dict[str, str]]:
     # inner `expr AS name` aliases are scoped per SELECT: the top-level
     # hoist in translate() skips subquery bodies, so hoist again at each
     # query scope (no-op when the scope has none)
@@ -17000,10 +16979,11 @@ def _translate_query_text_inner(toks: list[str]) -> str:
             for part in ctes:
                 close = _match_paren(part, 2)
                 parts.append(
-                    f"{part[0]} AS ( {_translate_query_text(part[3:close])} )"
+                    f"{part[0]} AS ( {_translate_query(part[3:close])[0]} )"
                 )
             rendered = "WITH " + " , ".join(parts) + " "
-        return rendered + _translate_query_text(body)
+        body_sql, settings = _translate_query(body)
+        return rendered + body_sql, settings
 
     # split top-level UNION
     parts: list[list[str]] = []
@@ -17031,9 +17011,11 @@ def _translate_query_text_inner(toks: list[str]) -> str:
         i += 1
     parts.append(cur)
     rendered_parts = []
+    settings: dict[str, str] = {}
     for p in parts:
-        sql_text, _ = _translate_select_tokens(p)
+        sql_text, part_settings = _translate_select_tokens(p)
         rendered_parts.append(sql_text)
+        settings.update(part_settings)
     if len(rendered_parts) > 1:
         # parenthesize every branch: the reference binds a branch's
         # ORDER BY/LIMIT to that branch; Spark's parser rejects e.g.
@@ -17042,7 +17024,7 @@ def _translate_query_text_inner(toks: list[str]) -> str:
     out = rendered_parts[0]
     for sep, nxt in zip(seps, rendered_parts[1:]):
         out += f" {sep} {nxt}"
-    return out
+    return out, settings
 
 
 # ---------------------------------------------------------------------------
@@ -17058,7 +17040,10 @@ def _translate_pipe(stages: list[list[str]]) -> tuple[str, dict[str, str]]:
             raise DialectError("empty pipe stage")
         head = _kw(stage[0])
         if head == "WHERE":
-            cond = _emit(_translate_expr(stage[1:]))
+            cond_toks, *set_toks = _split_top_kw(stage[1:], "SETTINGS")
+            for st in set_toks:
+                all_settings.update(_parse_settings(st))
+            cond = _emit(_translate_expr(cond_toks))
             prev = f"SELECT * FROM ( {prev} ) AS __p{k} WHERE {cond}"
         elif head == "SELECT":
             q = _parse_select(stage)
@@ -17248,6 +17233,7 @@ def _rewrite_uniq_state_consts(toks: list[str]) -> list[str]:
 def translate(query: str) -> TranslateResult:
     """Reference-dialect SQL -> Spark SQL (+ extracted SETTINGS, stream flag)."""
     _ARRAY_LAMBDA_VARS.set(frozenset())
+    _ASOF_SEQ.set(0)
     toks = tokenize(query.strip().rstrip(";"))
     if not toks:
         raise DialectError("empty query")
@@ -17284,14 +17270,8 @@ def translate(query: str) -> TranslateResult:
         sql_text, settings = _translate_pipe(stages)
     elif _kw(toks[0]) in ("SELECT", "WITH") or toks[0] == "(":
         # "(" start: parenthesized SELECTs around UNION branches —
-        # _translate_query_text / _translate_select_tokens unwrap them
-        sql_text = _translate_query_text(toks)
-        settings = {}
-        # settings were parsed per-select; re-extract from last select for
-        # the single-query case
-        if _kw(toks[0]) == "SELECT":
-            _, settings = _translate_select_tokens(toks)
-            sql_text = _translate_query_text(toks)
+        # _translate_query / _translate_select_tokens unwrap them
+        sql_text, settings = _translate_query(toks)
     else:
         raise DialectError(f"unsupported statement start: {toks[0]!r}")
     n_shards = _DIST_NO_MERGE.get()

@@ -1331,7 +1331,7 @@ class ScriptRunner:
         if len(ranges) > 64:
             return None
         parts = []
-        for pp, lo, hi, _g in ranges:
+        for pp, lo, hi, _ in ranges:
             cond = f"{col} >= {lo} AND {col} <= {hi}"
             if pk:
                 cond = f"({t.partition_by_raw}) = {pp} AND " + cond
@@ -2269,7 +2269,6 @@ class ScriptRunner:
             st = self.tables.get(mv["storage"])
             if st is None:
                 return
-            by_name = {c.name: c for c in st.cols}
             sel = []
             for f, c in zip(rows.schema.fields, st.cols):
                 sel.append(F.col(f.name).cast(c.spark_type).alias(c.name))

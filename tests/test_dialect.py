@@ -66,6 +66,70 @@ def test_settings_extracted():
     assert "SETTINGS" not in res.spark_sql
 
 
+@pytest.fixture
+def settings_spark(spark):
+    """The session for a test that runs a query with SETTINGS: sql()
+    applies them to the session, so the shuffle width is put back."""
+    conf = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(conf)
+    yield spark
+    spark.conf.set(conf, before)
+
+
+def test_union_settings_per_part_later_wins(settings_spark):
+    q = (
+        "SELECT 1 AS a SETTINGS max_threads = 3 "
+        "UNION ALL SELECT 2 AS a SETTINGS max_threads = 2"
+    )
+    res = translate(q)
+    assert res.settings == {"max_threads": "2"}
+    assert "SETTINGS" not in res.spark_sql
+    assert sorted(r.a for r in dsql(settings_spark, q).collect()) == [1, 2]
+
+
+def test_with_query_returns_body_settings():
+    res = translate(
+        "WITH x AS (SELECT 1 AS a) SELECT * FROM x SETTINGS max_threads = 2"
+    )
+    assert res.settings == {"max_threads": "2"}
+    assert "SETTINGS" not in res.spark_sql
+
+
+def test_pipe_where_stage_settings_split_off(settings_spark):
+    q = "SELECT a FROM pipe_settings_t | WHERE a > 1 SETTINGS max_threads = 2"
+    res = translate(q)
+    assert res.settings == {"max_threads": "2"}
+    assert "SETTINGS" not in res.spark_sql
+    settings_spark.createDataFrame(
+        [(1,), (2,), (3,)], "a INT"
+    ).createOrReplaceTempView("pipe_settings_t")
+    assert sorted(r.a for r in dsql(settings_spark, q).collect()) == [2, 3]
+
+
+def test_select_translated_in_one_pass(monkeypatch):
+    import daisy_spark.plans.dialect as D
+
+    calls = []
+    real = D._translate_select_tokens
+
+    def counting(toks):
+        calls.append(toks)
+        return real(toks)
+
+    monkeypatch.setattr(D, "_translate_select_tokens", counting)
+    res = D.translate("SELECT a FROM t WHERE a > 1 SETTINGS max_threads = 4")
+    assert len(calls) == 1
+    assert res.settings == {"max_threads": "4"}
+
+
+def test_asof_translation_is_pure():
+    q = "SELECT * FROM a ASOF JOIN b ON a.k = b.k AND a.t >= b.t"
+    first = translate(q).spark_sql
+    translate("SELECT * FROM c ASOF LEFT JOIN d USING(k, t)")
+    assert translate(q).spark_sql == first
+    assert "AS __asof_0" in first
+
+
 def test_stream_flag():
     res = translate("SELECT STREAM count() FROM t")
     assert res.is_stream

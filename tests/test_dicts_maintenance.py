@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from daisy_spark import maintenance as MNT
 from daisy_spark import streaming as ST
+from daisy_spark.catalog import read_parquet
 from daisy_spark.operators.dicts import Dictionary, join_get
 from daisy_spark.plans import sql as dsql
 
@@ -57,6 +58,50 @@ def test_ttl_drops_partitions_without_scan(spark, tmp_path):
     res = MNT.apply_ttl(spark, sink, "_time", "2024-01-03 00:00:00")
     assert res.partitions_dropped == 2  # 0101 and 0102 whole dirs
     assert res.rows_before == 6 and res.rows_after == 3
+
+
+def _ttl_sink(spark, tmp_path, times, granularity):
+    sink = str(tmp_path / f"t_{granularity}")
+    rows = [
+        {"_idem": f"k{i}", "v": i, "_time": t} for i, t in enumerate(times)
+    ]
+    df = spark.createDataFrame(rows).withColumn(
+        "_time", F.col("_time").cast("timestamp")
+    )
+    ST.ingest_batch(df, sink, granularity=granularity)
+    return sink
+
+
+def test_ttl_month_sink_keeps_live_partition(spark, tmp_path):
+    sink = _ttl_sink(spark, tmp_path, [
+        "2024-01-10 00:00:00", "2024-01-20 00:00:00", "2024-03-05 00:00:00",
+    ], "M")
+    res = MNT.apply_ttl(spark, sink, "_time", "2024-02-01 00:00:00")
+    assert res.partitions_dropped == 1  # 202401 ends at the cutoff
+    assert res.rows_before == 3 and res.rows_after == 1
+    left = [r.v for r in read_parquet(spark, sink).collect()]
+    assert left == [2]
+
+
+def test_ttl_hour_sink_drops_whole_hours(spark, tmp_path):
+    sink = _ttl_sink(spark, tmp_path, [
+        "2024-01-03 10:15:00", "2024-01-03 11:59:59",
+        "2024-01-03 12:10:00", "2024-01-03 12:40:00",
+    ], "H")
+    res = MNT.apply_ttl(spark, sink, "_time", "2024-01-03 12:30:00")
+    # 10h and 11h end on or before 12:30; 12h holds the cutoff and is
+    # rewritten, keeping only its 12:40 row
+    assert res.partitions_dropped == 2
+    assert res.rows_before == 4 and res.rows_after == 1
+
+
+def test_ttl_every_partition_expired(spark, tmp_path):
+    sink = _ttl_sink(spark, tmp_path, [
+        "2024-01-01 12:00:00", "2024-01-02 12:00:00",
+    ], "D")
+    res = MNT.apply_ttl(spark, sink, "_time", "2024-02-01 00:00:00")
+    assert res.partitions_dropped == 2
+    assert res.rows_before == 2 and res.rows_after == 0
 
 
 def test_mutations(spark, tmp_path):
