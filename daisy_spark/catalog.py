@@ -207,20 +207,34 @@ def recording_write(
     the next :func:`read_parquet` starts no job (the writer records what
     it wrote, as Structured Streaming's file-sink log does).
 
-    The cached entry survives only if it was current before the write
-    (nothing else changed the path since it was last read) and the
-    written data columns, compared by name with ``partition_by`` left
-    out, have the cached types; otherwise it is dropped.  The entry keeps
-    the schema Spark inferred, not the writer's: partition values are
-    typed on read (an ``H``-granularity ``_part`` is written as a string
-    and read back as long), and the column order is the one read back.
-    Not detected: a write from outside the engine to the same path that
-    runs while this one does."""
+    A write that creates ``path`` records the schema of a read with the
+    written data columns given (``partition_by`` left out): Spark then
+    types the partition columns from the directory names, as inference
+    does, and reads no footer.  On an existing path, the cached entry
+    survives only if it was current before the write (nothing else
+    changed the path since it was last read) and the written data
+    columns, compared by name with ``partition_by`` left out, have the
+    cached types; otherwise it is dropped.  The entry keeps the schema
+    Spark inferred, not the writer's: partition values are typed on read
+    (an ``H``-granularity ``_part`` is written as a string and read back
+    as long), and the column order is the one read back.  Not detected: a
+    write from outside the engine to the same path that runs while this
+    one does."""
     key = os.path.abspath(path)
-    cache = _SCHEMAS.get(spark, {})
+    cache = _SCHEMAS.setdefault(spark, {})
+    created = not os.path.exists(key)
     entry = cache.get(key)
     current = entry is not None and entry[0] == _fingerprint(key)
     yield
+    if created:
+        data = T.StructType(
+            [T.StructField(f.name, f.dataType) for f in written.fields
+             if f.name not in partition_by]
+        )
+        fp = _fingerprint(key)
+        if fp is not None:
+            cache[key] = (fp, spark.read.schema(data).parquet(path).schema)
+        return
     if entry is None:
         return
     if current and _column_types(written, partition_by) == _column_types(

@@ -20,10 +20,12 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import re
 import shutil
+import zoneinfo
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from daisy_spark.catalog import read_parquet, recording_write
@@ -37,8 +39,10 @@ class MaintenanceResult:
     partitions_dropped: int = 0
 
 
-def _atomic_rewrite(spark: SparkSession, path: str, df: DataFrame) -> None:
-    """Rewrite a parquet table directory via a staging dir + swap.
+def _atomic_rewrite(spark: SparkSession, path: str, df: DataFrame) -> int:
+    """Rewrite a parquet table directory via a staging dir + swap; returns
+    the rows written, from an ``Observation`` at the root of the write
+    (so a caller needs no count of the rewritten table).
 
     Spark cannot overwrite a path it is reading; staging keeps the table
     readable until the swap and makes a crashed rewrite recoverable (the
@@ -48,7 +52,10 @@ def _atomic_rewrite(spark: SparkSession, path: str, df: DataFrame) -> None:
     of ``path`` reuses its schema when the column types did not change."""
     staging = path.rstrip("/") + ".__rewrite__"
     backup = path.rstrip("/") + ".__old__"
-    writer = df.write.mode("overwrite")
+    written = Observation()
+    writer = df.observe(written, F.count(F.lit(1)).alias("rows")).write.mode(
+        "overwrite"
+    )
     parts = ()
     if PARTITION_COL in df.columns:
         writer = writer.partitionBy(PARTITION_COL)
@@ -58,6 +65,7 @@ def _atomic_rewrite(spark: SparkSession, path: str, df: DataFrame) -> None:
         os.rename(path, backup)
         os.rename(staging, path)
     shutil.rmtree(backup)
+    return written.get["rows"]
 
 
 #: ``_part`` digit count -> (format, period length) of the granularities
@@ -88,6 +96,48 @@ def _partition_end(value: str) -> dt.datetime | None:
     return start + step
 
 
+#: the string forms a timestamp cast reads (Spark's stringToTimestamp):
+#: ``yyyy[-[m]m[-[d]d[( |T)[h]h:[m]m[:[s]s[.fraction]]]]]`` + an optional zone
+_TIMESTAMP = re.compile(
+    r"\s*(\d{4})(?:-(\d{1,2})(?:-(\d{1,2})(?:[ T](\d{1,2}):(\d{1,2})"
+    r"(?::(\d{1,2})(?:\.\d{0,9})?)?)?)?)?\s*(\S.*?)?\s*"
+)
+_OFFSET = re.compile(
+    r"(?:UTC|GMT|UT)?([+-])(\d{1,2})(?::?(\d{2}))?(?::?(\d{2}))?", re.I
+)
+
+
+def _zone(name: str) -> dt.tzinfo:
+    """A zone id as Spark reads one: ``Z``, ``UTC``/``GMT``/``UT``, an
+    offset (``+01:00``, ``-0530``, ``GMT+8``) or a region (``Europe/Oslo``)."""
+    if name.upper() in ("Z", "UTC", "GMT", "UT"):
+        return dt.timezone.utc
+    m = _OFFSET.fullmatch(name)
+    if m:
+        sign = -1 if m[1] == "-" else 1
+        offset = dt.timedelta(
+            hours=int(m[2]), minutes=int(m[3] or 0), seconds=int(m[4] or 0)
+        )
+        return dt.timezone(sign * offset)
+    return zoneinfo.ZoneInfo(name)
+
+
+def _cutoff_wall(spark: SparkSession, older_than: str) -> dt.datetime:
+    """``older_than`` cast to a timestamp, on the wall clock of the session
+    time zone (the one partition values are formatted in), truncated to
+    the second: what ``date_format(cast(older_than as timestamp))`` gives,
+    computed without a Spark job.  A string with no zone is read in the
+    session time zone, as the cast reads it."""
+    m = _TIMESTAMP.fullmatch(older_than)
+    if m is None:
+        raise ValueError(f"not a timestamp: {older_than!r}")
+    fields = (int(v or d) for v, d in zip(m.groups()[:6], (0, 1, 1, 0, 0, 0)))
+    session = _zone(spark.conf.get("spark.sql.session.timeZone"))
+    zone = _zone(m[7]) if m[7] else session
+    local = dt.datetime(*fields, tzinfo=zone)
+    return local.astimezone(session).replace(tzinfo=None)
+
+
 def apply_ttl(
     spark: SparkSession,
     path: str,
@@ -100,7 +150,9 @@ def apply_ttl(
     (streaming.PARTITION_COL, any of M/D/H/m), a partition DIRECTORY
     whose whole period ends on or before the cutoff is deleted without
     reading a row — the scan+rewrite fallback only runs for the
-    partition the cutoff falls in.
+    partition the cutoff falls in.  One aggregate over what is left
+    counts its rows and its expired rows; a rewrite reports the rows it
+    wrote.
     """
     df = read_parquet(spark, path)
     cutoff = F.lit(older_than).cast("timestamp")
@@ -108,15 +160,7 @@ def apply_ttl(
 
     dropped_dirs = 0
     if PARTITION_COL in df.columns:
-        # the cutoff on the wall clock the partition values were
-        # formatted in (the session time zone), truncated to the second
-        cutoff_wall = dt.datetime.strptime(
-            spark.range(1)
-            .select(F.date_format(cutoff, "yyyyMMddHHmmss").alias("c"))
-            .collect()[0]
-            .c,
-            "%Y%m%d%H%M%S",
-        )
+        cutoff_wall = _cutoff_wall(spark, older_than)
         kept = 0
         for entry in list(os.listdir(path)):
             if entry.startswith(f"{PARTITION_COL}="):
@@ -130,10 +174,11 @@ def apply_ttl(
             return MaintenanceResult(before, 0, dropped_dirs)
         df = read_parquet(spark, path)
 
-    remaining_expired = df.filter(F.col(time_col) < cutoff).limit(1).count()
-    if remaining_expired:
-        _atomic_rewrite(spark, path, df.filter(F.col(time_col) >= cutoff))
-    after = read_parquet(spark, path).count()
+    after, expired = df.agg(
+        F.count(F.lit(1)), F.count_if(F.col(time_col) < cutoff)
+    ).first()
+    if expired:
+        after = _atomic_rewrite(spark, path, df.filter(F.col(time_col) >= cutoff))
     return MaintenanceResult(before, after, dropped_dirs)
 
 
@@ -143,8 +188,7 @@ def mutate_delete(
     """ALTER TABLE ... DELETE WHERE predicate — rewrite without matches."""
     df = read_parquet(spark, path)
     before = df.count()
-    _atomic_rewrite(spark, path, df.filter(~predicate))
-    after = read_parquet(spark, path).count()
+    after = _atomic_rewrite(spark, path, df.filter(~predicate))
     return MaintenanceResult(before, after)
 
 
@@ -188,7 +232,5 @@ def optimize(
             for f in fs
         )
         target_partitions = max(1, total_bytes // (128 << 20))
-    out = df.coalesce(int(target_partitions))
-    _atomic_rewrite(spark, path, out)
-    after = read_parquet(spark, path).count()
+    after = _atomic_rewrite(spark, path, df.coalesce(int(target_partitions)))
     return MaintenanceResult(before, after)

@@ -11,43 +11,48 @@ buildIdempotentKeysIndex).
 
 Spark-first mapping:
 
-- batch ingest      = DataFrame -> partitioned parquet append, with an
-                      anti-join against already-ingested ``_idem`` keys
-                      (exactly-once on replay, the reference's contract),
-                      in two Spark actions: a count per partition (the
-                      partitions to read keys from, and rows in) and the
-                      write, whose rows appended come from an
-                      ``Observation`` of the written plan, as Structured
-                      Streaming reports what a write did from the
-                      execution itself;
-- streaming ingest  = readStream -> withWatermark + dropDuplicates on the
-                      idempotent key (Spark's state store plays the role
-                      of the reference's in-memory key index, with the
-                      watermark as its ``max_idempotent_ids`` retention
-                      analog) -> foreachBatch partitioned append with
-                      checkpointing (restart-safe offsets).
+- batch ingest      = DataFrame -> partitioned parquet append, exactly
+                      once on replay (the reference's contract), in two
+                      flat Spark queries (:func:`_append`): an observed
+                      scan of ``_part`` into the noop sink gives rows in
+                      and the partitions touched, and the write dedups
+                      the batch on ``_idem`` and anti-joins it against
+                      the existing keys of those partitions.  An
+                      ``Observation`` at the root of the written plan
+                      gives the rows appended, as Structured Streaming
+                      reports what a write did from the execution itself;
+- streaming ingest  = readStream -> withWatermark +
+                      dropDuplicatesWithinWatermark on the idempotent key
+                      (Spark's state store plays the reference's
+                      in-memory key index; it holds a key for the
+                      watermark delay, the analog of its
+                      ``max_idempotent_ids`` retention) -> foreachBatch
+                      through the batch append, whose anti-join against
+                      the sink drops later replays and a re-run
+                      micro-batch; checkpointing makes offsets
+                      restart-safe.
 
 Partition columns follow the reference granularities: M/D/H/m.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from daisy_spark.catalog import read_parquet, recording_write
 
-#: reference granularity -> partition column expression over _time
-#: (TableRestRouterHandler.cpp:55-58); thunks because building a Column
-#: requires an active SparkSession
+#: reference granularity -> partition column expression over the
+#: ``_time`` column (TableRestRouterHandler.cpp:55-58)
 GRANULARITY_EXPRS = {
-    "M": lambda: F.date_format("_time", "yyyyMM").cast("int"),
-    "D": lambda: F.date_format("_time", "yyyyMMdd").cast("int"),
-    "H": lambda: F.date_format("_time", "yyyyMMddHH"),
-    "m": lambda: F.date_format("_time", "yyyyMMddHHmm"),
+    "M": lambda t: F.date_format(t, "yyyyMM").cast("int"),
+    "D": lambda t: F.date_format(t, "yyyyMMdd").cast("int"),
+    "H": lambda t: F.date_format(t, "yyyyMMddHH"),
+    "m": lambda t: F.date_format(t, "yyyyMMddHHmm"),
 }
 
 IDEM_COL = "_idem"
@@ -55,34 +60,56 @@ TIME_COL = "_time"
 PARTITION_COL = "_part"
 
 
+def _clock() -> dt.datetime:
+    """The engine's clock: a batch ingest reads it once per call for a
+    defaulted ``_time`` and ``_index_time``, so both of the call's
+    queries see one instant (``current_timestamp()`` would be taken
+    again by each query, and a call across a period boundary would count
+    one partition and write another)."""
+    return dt.datetime.now(dt.timezone.utc)
+
+
+def _ingest_time(now: dt.datetime | None) -> Column:
+    # a stream has no call-wide instant: Spark fixes current_timestamp()
+    # per micro-batch
+    return F.current_timestamp() if now is None else F.lit(now)
+
+
+def _partition_expr(granularity: str, time: Column) -> Column:
+    if granularity not in GRANULARITY_EXPRS:
+        raise ValueError(f"granularity must be one of M/D/H/m, got {granularity!r}")
+    return GRANULARITY_EXPRS[granularity](time)
+
+
 def with_ingest_columns(
     df: DataFrame,
     time_col: str | None = None,
     idem_col: str | None = None,
     granularity: str = "D",
+    now: dt.datetime | None = None,
 ) -> DataFrame:
-    """Attach the ingest conventions: ``_time`` (defaulted to
-    current_timestamp when absent, like the rawstore DEFAULT now64(3)),
-    ``_idem`` (defaulted to a content hash when absent), and the
-    granularity partition column.
+    """Attach the ingest conventions in one projection: ``_time``
+    (defaulted to ``now``, or ``current_timestamp()`` when None, like the
+    rawstore DEFAULT now64(3)), ``_idem`` (defaulted to a content hash
+    when absent), and the granularity partition column.
 
     The content hash covers only the caller's columns: a defaulted
     ``_time`` differs on every call, so hashing it would give a replayed
     row a new key and break exactly-once."""
-    if granularity not in GRANULARITY_EXPRS:
-        raise ValueError(f"granularity must be one of M/D/H/m, got {granularity!r}")
-    content = df.columns
+    new = {}
     if time_col and time_col != TIME_COL:
-        df = df.withColumn(TIME_COL, F.col(time_col).cast("timestamp"))
+        new[TIME_COL] = F.col(time_col).cast("timestamp")
     elif TIME_COL not in df.columns:
-        df = df.withColumn(TIME_COL, F.current_timestamp())
+        new[TIME_COL] = _ingest_time(now)
     if idem_col and idem_col != IDEM_COL:
-        df = df.withColumn(IDEM_COL, F.col(idem_col).cast("string"))
+        new[IDEM_COL] = F.col(idem_col).cast("string")
     elif IDEM_COL not in df.columns:
-        df = df.withColumn(
-            IDEM_COL, F.sha2(F.to_json(F.struct(*content)), 256)
-        )
-    return df.withColumn(PARTITION_COL, GRANULARITY_EXPRS[granularity]())
+        content = (new[c].alias(c) if c in new else c for c in df.columns)
+        new[IDEM_COL] = F.sha2(F.to_json(F.struct(*content)), 256)
+    new[PARTITION_COL] = _partition_expr(
+        granularity, new.get(TIME_COL, F.col(TIME_COL))
+    )
+    return df.withColumns(new)
 
 
 @dataclass
@@ -93,11 +120,80 @@ class IngestResult:
     partitions: list
 
 
-def partition_counts(staged: DataFrame) -> DataFrame:
-    """Rows per ``_part`` of a staged batch: the first of an ingest's two
-    actions.  Only ``_part`` is read, so Catalyst prunes what the key
-    needs (the rawstore occurrence-number window) out of this plan."""
-    return staged.groupBy(PARTITION_COL).count()
+def partition_counts(staged: DataFrame, seen: Observation) -> DataFrame:
+    """The first of an ingest's two queries: ``_part`` of a staged batch,
+    observed into ``seen`` as ``rows`` (rows in), ``dated`` (rows with a
+    partition) and ``parts`` (the partitions), for the noop sink.  A
+    scan with no exchange, one Spark job; only ``_part`` is read, so
+    Catalyst prunes what the key needs (the rawstore occurrence-number
+    window) out of this plan."""
+    return staged.select(PARTITION_COL).observe(
+        seen,
+        F.count(F.lit(1)).alias("rows"),
+        F.count(PARTITION_COL).alias("dated"),
+        F.collect_set(PARTITION_COL).alias("parts"),
+    )
+
+
+def _in_partitions(parts: list) -> Column:
+    known = F.col(PARTITION_COL).isin([p for p in parts if p is not None])
+    # IN never matches a null: the null partition needs its own test
+    return known | F.col(PARTITION_COL).isNull() if None in parts else known
+
+
+def _append(staged: DataFrame, path: str, dedup: bool = True) -> IngestResult:
+    """Exactly-once partitioned append of a staged batch (one carrying
+    ``_time``, ``_idem`` and ``_part``): the one append path of batch,
+    rawstore and streaming ingest.  Two Spark queries:
+
+    - the count (:func:`partition_counts`) gives rows in and the
+      partitions the batch touches, which prune the existing-key read;
+      an empty batch stops here;
+    - the write: in-batch dedup on ``_idem`` (skipped with ``dedup=False``
+      for a batch whose keys are unique by construction), an anti-join
+      against the existing keys of those partitions (no full-sink scan),
+      and the partitioned append.  An ``Observation`` at the root of the
+      written plan counts the rows appended.  It must stay at the root:
+      one below an exchange is lost when AQE cuts out an empty branch (a
+      full replay), and ``Observation.get`` then fails.
+
+    The columns are written in the staged order, and the append is
+    recorded with the session's schema resolver, so the searches and
+    ingests that follow read the sink without a schema-inference job."""
+    seen = Observation()
+    partition_counts(staged, seen).write.format("noop").mode("overwrite").save()
+    stats = seen.get
+    rows_in = stats["rows"]
+    parts = sorted(stats["parts"])
+    if stats["dated"] < rows_in:
+        parts.append(None)  # a null _time gives a null partition: last
+    if not rows_in:
+        return IngestResult(appended=0, deduped=0, partitions=parts)
+    spark = staged.sparkSession
+    out = staged.dropDuplicates([IDEM_COL]) if dedup else staged
+    if os.path.exists(path):
+        existing = (
+            read_parquet(spark, path).filter(_in_partitions(parts)).select(IDEM_COL)
+        )
+        if dedup:
+            # a shuffled hash join, where Spark would broadcast the small
+            # key set and push the anti-join below the dedup aggregate, so
+            # that the batch's map stage waits for the broadcast.  Hinted,
+            # the join stays above the aggregate: the sink's keys shuffle
+            # while the batch's map stage runs, and the batch's one
+            # exchange on _idem serves the dedup and the join.  Without
+            # the dedup the broadcast already runs beside the batch's
+            # map stage (the rawstore window's).
+            existing = existing.hint("shuffle_hash")
+        out = out.join(existing, out[IDEM_COL] == existing[IDEM_COL], "left_anti")
+    written = Observation()
+    out = out.observe(written, F.count(F.lit(1)).alias("rows"))
+    with recording_write(spark, path, staged.schema, (PARTITION_COL,)):
+        out.write.mode("append").partitionBy(PARTITION_COL).parquet(path)
+    appended = written.get["rows"]
+    return IngestResult(
+        appended=appended, deduped=rows_in - appended, partitions=parts
+    )
 
 
 def ingest_batch(
@@ -109,50 +205,11 @@ def ingest_batch(
 ) -> IngestResult:
     """Exactly-once batch append: drop rows whose ``_idem`` key is already
     present in the sink (replay-safe, the reference's idempotent-commit
-    contract), dedup within the batch, then append partitioned parquet.
-
-    Two Spark actions:
-
-    - a count per ``_part`` (:func:`partition_counts`) gives the
-      partitions the batch touches, which prune the existing-key read,
-      and rows in, their sum;
-    - the write: in-batch dedup, an anti-join on the key against the
-      existing keys of those partitions (no full-sink scan), and the
-      partitioned append.  An ``Observation`` at the root of the written
-      plan counts the rows appended.  It must stay at the root: one below
-      an exchange is lost when AQE cuts out an empty branch (a full
-      replay), and ``Observation.get`` then fails.
-
-    Every append writes its columns in the staged order, and the append
-    is recorded with the session's schema resolver, so the searches that
-    follow an ingest read the sink without a schema-inference job.
-    """
-    spark = df.sparkSession
-    staged = with_ingest_columns(df, time_col, idem_col, granularity)
-    counts = partition_counts(staged).collect()
-    # a null _time gives a null partition: sort it last
-    parts = sorted((r[0] for r in counts), key=lambda p: (p is None, p))
-    out = staged.dropDuplicates([IDEM_COL])
-    if os.path.exists(path):
-        existing = (
-            read_parquet(spark, path)
-            .filter(F.col(PARTITION_COL).isin(parts))
-            .select(IDEM_COL)
-        )
-        # the join moves its key to the front: select the staged order
-        # back, or each append after the first writes a different order
-        out = out.join(existing, on=IDEM_COL, how="left_anti").select(
-            *staged.columns
-        )
-    written = Observation()
-    out = out.observe(written, F.count(F.lit(1)).alias("rows"))
-    with recording_write(spark, path, staged.schema, (PARTITION_COL,)):
-        out.write.mode("append").partitionBy(PARTITION_COL).parquet(path)
-    appended = written.get["rows"]
-    rows_in = sum(r[1] for r in counts)
-    return IngestResult(
-        appended=appended, deduped=rows_in - appended, partitions=parts
-    )
+    contract), dedup within the batch, then append partitioned parquet,
+    in two Spark queries (:func:`_append`).  A defaulted ``_time`` is
+    the engine's clock read once for the call."""
+    staged = with_ingest_columns(df, time_col, idem_col, granularity, now=_clock())
+    return _append(staged, path)
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
@@ -175,21 +232,23 @@ def to_rawstore(
     sourcetype: str = "generic_single_line",
     source: str = "",
     host: str = "",
+    now: dt.datetime | None = None,
 ) -> DataFrame:
     """Shape arbitrary line data into the rawstore schema: ``_raw`` is
     the untouched event text, ``_time`` the event time (defaulted to
     ingest time, like the rawstore column DEFAULT now64(3)),
-    ``_index_time`` always ingest time.  An ``_idem`` column of
-    ``lines`` is carried through."""
-    out = lines.withColumn("_raw", F.col(raw_col).cast("string"))
+    ``_index_time`` always ingest time: ``now``, or
+    ``current_timestamp()`` when None.  An ``_idem`` column of ``lines``
+    is carried through."""
+    ingest_time = _ingest_time(now)
     if time_col and time_col in lines.columns:
-        out = out.withColumn(TIME_COL, F.col(time_col).cast("timestamp"))
+        event_time = F.col(time_col).cast("timestamp")
     else:
-        out = out.withColumn(TIME_COL, F.current_timestamp())
-    return out.select(
-        "_raw",
-        TIME_COL,
-        F.current_timestamp().alias("_index_time"),
+        event_time = ingest_time
+    return lines.select(
+        F.col(raw_col).cast("string").alias("_raw"),
+        event_time.alias(TIME_COL),
+        ingest_time.alias("_index_time"),
         F.lit(sourcetype).alias("sourcetype"),
         F.lit(source).alias("source"),
         F.lit(host).alias("host"),
@@ -206,9 +265,10 @@ def ingest_rawstore(
     idem_col: str | None = None,
     **source_coords,
 ) -> IngestResult:
-    """Rawstore ingest = shape to the fixed schema + the standard
-    idempotent partitioned append (:func:`ingest_batch`, whose two
-    actions give the counts).
+    """Rawstore ingest = shape to the fixed schema + the idempotent
+    partitioned append of :func:`ingest_batch` (:func:`_append`, whose
+    two queries give the counts).  A defaulted ``_time`` and
+    ``_index_time`` are the engine's clock read once for the call.
 
     The idempotent key is the caller's ``idem_col`` when given, as the
     reference takes one from the client per block
@@ -227,19 +287,23 @@ def ingest_rawstore(
     lands in a later partition than the first send (past midnight for
     ``D``) is appended again.  A caller key avoids the first.
 
-    The occurrence-number window runs once, in the write: the count per
-    partition reads only ``_part``, and Catalyst prunes the window out of
-    that plan."""
+    The occurrence-number window runs once, in the write: the count
+    reads only ``_part``, and Catalyst prunes the window out of that
+    plan.  Content keys are unique within the batch by construction, so
+    the write skips the in-batch dedup and the window's is the only
+    exchange on the batch side before the join; a caller key is still
+    deduped."""
     if idem_col:
         lines = lines.withColumn(IDEM_COL, F.col(idem_col).cast("string"))
-    shaped = to_rawstore(lines, raw_col, time_col, **source_coords)
+    shaped = to_rawstore(lines, raw_col, time_col, now=_clock(), **source_coords)
+    new = {PARTITION_COL: _partition_expr(granularity, F.col(TIME_COL))}
     if not idem_col:
         event_time = time_col and time_col in lines.columns
         content = ["_raw"] + ([TIME_COL] if event_time else [])
         nth = F.row_number().over(Window.partitionBy(*content).orderBy("_raw"))
         key = F.struct(*content, nth.alias("n"))
-        shaped = shaped.withColumn(IDEM_COL, F.sha2(F.to_json(key), 256))
-    return ingest_batch(shaped, path, granularity=granularity)
+        new = {IDEM_COL: F.sha2(F.to_json(key), 256), **new}
+    return _append(shaped.withColumns(new), path, dedup=bool(idem_col))
 
 
 def search_rawstore(
@@ -275,20 +339,32 @@ def ingest_stream(
 ):
     """Structured Streaming ingest with idempotent-key dedup.
 
-    ``withWatermark(_time) + dropDuplicates(_idem)`` keeps the key index
-    bounded (state older than the watermark ages out — the Spark analog of
-    the reference's max_idempotent_ids ring); ``foreachBatch`` appends
-    partitioned parquet; the checkpoint makes source offsets + dedup state
-    restart-safe.  Returns the StreamingQuery.
+    ``withWatermark(_time) + dropDuplicatesWithinWatermark(_idem)`` drops
+    a key seen again within the watermark delay and holds each key in
+    state for that delay only (the Spark analog of the reference's
+    max_idempotent_ids ring), so the state stays bounded as event time
+    advances.  ``foreachBatch`` appends each micro-batch through the
+    batch ingest's append (:func:`_append`): its anti-join against the
+    sink drops a replay that comes after the state let the key go, keys
+    a batch ingest already wrote, and a micro-batch that Spark runs
+    again after a crash between the sink write and the commit.  The
+    checkpoint makes source offsets + dedup state restart-safe.  Returns
+    the StreamingQuery.
     """
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch_df.write.mode("append").partitionBy(PARTITION_COL).parquet(path)
+        # the append reads the micro-batch twice (count and write): cache
+        # it, or each read runs the source and the dedup state again
+        batch_df.persist()
+        try:
+            _append(batch_df, path)
+        finally:
+            batch_df.unpersist()
 
     staged = with_ingest_columns(stream_df, time_col, idem_col, granularity)
-    staged = staged.withWatermark(TIME_COL, watermark).dropDuplicates([IDEM_COL])
+    staged = staged.withWatermark(TIME_COL, watermark).dropDuplicatesWithinWatermark(
+        [IDEM_COL]
+    )
     writer = (
         staged.writeStream.option("checkpointLocation", checkpoint)
         .foreachBatch(write_batch)

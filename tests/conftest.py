@@ -1,3 +1,4 @@
+import itertools
 import logging
 import os
 import sys
@@ -125,6 +126,32 @@ def spark(spark_manager):
     module recycles, and it does so through spark_manager directly.
     """
     return spark_manager.get()
+
+
+_JOB_GROUPS = itertools.count()
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` -> ``(fn(), number of Spark jobs fn started)``:
+    ``fn`` runs in a job group of its own, counted from the status
+    tracker.  The job group is the SparkContext's, so ``fn`` may use any
+    session of it."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        gid = f"test-jobs:{next(_JOB_GROUPS)}"
+        sc.setJobGroup(gid, gid)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status store is fed by the listener bus: drain it, or a job
+        # that just ran may not be counted yet
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+    return run
 
 
 @pytest.fixture(scope="session")

@@ -15,28 +15,14 @@ EAGER_BUILDERS = {
 }
 
 
-def _build_jobs(spark, name: str, sf_dir: str) -> int:
-    sc = spark.sparkContext
-    gid = f"build-jobs:{name}"
-    sc.setJobGroup(gid, gid)
-    try:
-        QUERIES[name](spark, sf_dir)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # the status store is fed by the listener bus: drain it, or a job
-    # that just ran may not be counted yet
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(gid))
-
-
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - EAGER_BUILDERS))
-def test_second_build_starts_no_job(name, spark, sf_dir):
+def test_second_build_starts_no_job(name, spark, sf_dir, spark_jobs):
     QUERIES[name](spark, sf_dir)
-    assert _build_jobs(spark, name, sf_dir) == 0
+    assert spark_jobs(lambda: QUERIES[name](spark, sf_dir))[1] == 0
 
 
 @pytest.mark.parametrize("name", sorted(EAGER_BUILDERS))
-def test_eager_builder_still_starts_jobs(name, spark, sf_dir):
+def test_eager_builder_still_starts_jobs(name, spark, sf_dir, spark_jobs):
     # an allow-listed builder that became lazy must leave the list
     QUERIES[name](spark, sf_dir)
-    assert _build_jobs(spark, name, sf_dir) > 0
+    assert spark_jobs(lambda: QUERIES[name](spark, sf_dir))[1] > 0

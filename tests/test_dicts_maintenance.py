@@ -133,3 +133,54 @@ def test_explain_modes(spark):
     assert "Physical Plan" in plan
     syn = dsql(spark, "EXPLAIN SYNTAX SELECT toStartOfHour(now()) AS h").collect()[0][0]
     assert "date_trunc" in syn
+
+
+def test_optimize_runs_at_most_three_jobs(spark, tmp_path, spark_jobs):
+    # the count before and the write: the rows after come from an
+    # observation of the write, not from a count of the rewritten table;
+    # the table's schema is already known to the session
+    sink = str(tmp_path / "o")
+    spark.range(100).repartition(4).write.parquet(sink)
+    read_parquet(spark, sink)
+    res, n = spark_jobs(lambda: MNT.optimize(spark, sink))
+    assert res.rows_before == res.rows_after == 100
+    assert n <= 3, n
+
+
+def test_rewrite_of_every_row_reports_zero(spark, tmp_path):
+    sink = str(tmp_path / "m")
+    spark.range(10).write.parquet(sink)
+    res = MNT.mutate_delete(spark, sink, F.col("id") >= 0)
+    assert (res.rows_before, res.rows_after) == (10, 0)
+    assert read_parquet(spark, sink).count() == 0
+
+
+def test_ttl_cutoff_matches_spark_cast(spark):
+    strings = [
+        "2024-01-03",
+        "2024-1-3",
+        "2024-03",
+        "2024-01-03 12:30:00",
+        "2024-01-03T12:30:45.987654",
+        "2024-01-03 12:30",
+        "2024-01-03T23:30:00Z",
+        "2024-01-03 23:30:00+05:30",
+        "2024-01-03 01:30:00-0800",
+        "2024-01-03 01:30:00 UTC+01:00",
+        "2024-01-03 01:30:00 America/New_York",
+    ]
+
+    def spark_wall(s):
+        return spark.range(1).select(F.date_format(
+            F.lit(s).cast("timestamp"), "yyyy-MM-dd HH:mm:ss").alias("c")
+        ).first().c
+
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        for session_zone in ("UTC", "Asia/Kolkata", "America/Los_Angeles", "-03:00"):
+            spark.conf.set("spark.sql.session.timeZone", session_zone)
+            for s in strings:
+                got = MNT._cutoff_wall(spark, s).strftime("%Y-%m-%d %H:%M:%S")
+                assert got == spark_wall(s), (session_zone, s)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)

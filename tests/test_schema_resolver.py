@@ -4,7 +4,6 @@ serves reads with no Spark job, and never outlives a change to the path."""
 from __future__ import annotations
 
 import ast
-import itertools
 import os
 import re
 import shutil
@@ -16,20 +15,6 @@ from daisy_spark import streaming as ST
 from daisy_spark.catalog import read_parquet
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "daisy_spark")
-_GROUPS = itertools.count()
-
-
-def _jobs(spark, fn):
-    """(fn(), number of Spark jobs it started)."""
-    sc = spark.sparkContext
-    gid = f"resolver:{next(_GROUPS)}"
-    sc.setJobGroup(gid, gid)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
 
 
 def _rows(spark, n0: int, n: int, day: str = "2024-01-01"):
@@ -40,11 +25,11 @@ def _rows(spark, n0: int, n: int, day: str = "2024-01-01"):
     )
 
 
-def test_cached_schema_reads_without_a_job(spark, tmp_path):
+def test_cached_schema_reads_without_a_job(spark, tmp_path, spark_jobs):
     path = str(tmp_path / "t.parquet")
     _rows(spark, 0, 10).write.parquet(path)
-    first, n1 = _jobs(spark, lambda: read_parquet(spark, path).schema)
-    second, n2 = _jobs(spark, lambda: read_parquet(spark, path).schema)
+    first, n1 = spark_jobs(lambda: read_parquet(spark, path).schema)
+    second, n2 = spark_jobs(lambda: read_parquet(spark, path).schema)
     assert n1 >= 1 and n2 == 0
     assert first == second
     assert read_parquet(spark, path).count() == 10
@@ -73,26 +58,53 @@ def test_delete_and_rewrite_is_seen(spark, tmp_path):
     assert got.count() == 4
 
 
-def test_new_session_infers_its_own_schema(spark, tmp_path):
+def test_new_session_infers_its_own_schema(spark, tmp_path, spark_jobs):
     path = str(tmp_path / "t.parquet")
     _rows(spark, 0, 10).write.parquet(path)
     read_parquet(spark, path)
     other = spark.newSession()
-    _, n = _jobs(other, lambda: read_parquet(other, path).schema)
+    _, n = spark_jobs(lambda: read_parquet(other, path).schema)
     assert n >= 1
 
 
-def test_ingest_append_leaves_next_read_without_a_job(spark, tmp_path):
+def test_ingest_append_leaves_next_read_without_a_job(spark, tmp_path, spark_jobs):
     sink = str(tmp_path / "sink")
     ST.ingest_batch(_rows(spark, 0, 10), sink, time_col="ts", idem_col="event_id")
     # the second ingest reads the sink's keys (inferring once) and
     # records its append
     ST.ingest_batch(_rows(spark, 10, 10, "2024-01-02"), sink, time_col="ts",
                     idem_col="event_id")
-    df, n = _jobs(spark, lambda: ST.read_table(spark, sink))
+    df, n = spark_jobs(lambda: ST.read_table(spark, sink))
     assert n == 0
     assert df.count() == 20
     assert df.schema == spark.read.parquet(sink).schema
+
+
+def test_new_sink_schema_is_recorded_at_its_first_write(spark, tmp_path, spark_jobs):
+    # the write that creates a sink records its schema: the next ingest's
+    # existing-key read and the searches start no inference job
+    for granularity in "DH":
+        sink = str(tmp_path / f"sink_{granularity}")
+        ST.ingest_batch(_rows(spark, 0, 10), sink, time_col="ts",
+                        idem_col="event_id", granularity=granularity)
+        schema, n = spark_jobs(lambda: read_parquet(spark, sink).schema)
+        assert n == 0
+        assert schema == spark.newSession().read.parquet(sink).schema
+
+
+def test_second_ingest_into_new_sink_infers_nothing(spark, tmp_path, spark_jobs):
+    # a schema inference is a Spark job of its own: without the schema
+    # recorded at the first write, the second ingest would run one more
+    # job than the third
+    sink = str(tmp_path / "sink")
+    ST.ingest_batch(_rows(spark, 0, 10), sink, time_col="ts", idem_col="event_id")
+    jobs = [
+        spark_jobs(lambda: ST.ingest_batch(
+            _rows(spark, n0, 10), sink, time_col="ts", idem_col="event_id"
+        ))[1]
+        for n0 in (10, 20)
+    ]
+    assert jobs[0] == jobs[1], jobs
 
 
 def test_ingest_append_with_extra_column_matches_uncached_read(spark, tmp_path):

@@ -4,10 +4,12 @@ checkpointed restart."""
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 import time
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from daisy_spark import streaming as ST
@@ -187,8 +189,8 @@ def test_rawstore_ingest_and_search(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Counts from the two ingest actions: the per-partition count gives rows in
-# and the partitions, the Observation at the root of the write gives rows
+# Counts from the two ingest queries: the observed count gives rows in and
+# the partitions, the Observation at the root of the write gives rows
 # appended.  These inputs empty a branch of the written plan, where an
 # observation below an exchange would be lost.
 # ---------------------------------------------------------------------------
@@ -271,13 +273,13 @@ def test_rawstore_full_replay_counts(spark, tmp_path):
 
 
 def test_rawstore_count_plan_has_no_window(spark, tmp_path, monkeypatch):
-    # the occurrence-number window only feeds _idem: the count per
-    # partition must not pay its exchange, only the write does
+    # the occurrence-number window only feeds _idem: the count must not
+    # pay its exchange, only the write does
     plans = []
     real = ST.partition_counts
 
-    def recording(staged):
-        counts = real(staged)
+    def recording(staged, *args):
+        counts = real(staged, *args)
         plans.append((staged, counts))
         return counts
 
@@ -293,23 +295,10 @@ def test_rawstore_count_plan_has_no_window(spark, tmp_path, monkeypatch):
     assert "Window" not in optimized(counts)
 
 
-def _ingest_jobs(spark, fn) -> int:
-    sc = spark.sparkContext
-    gid = f"ingest-jobs:{time.monotonic_ns()}"
-    sc.setJobGroup(gid, gid)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # the status store is fed by the listener bus: drain it, or a job
-    # that just ran may not be counted yet
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(gid))
-
-
-def test_ingest_into_existing_sink_runs_at_most_six_jobs(spark, tmp_path):
-    # two actions: a count per partition and the observed write; the
-    # sink's schema is already known to the session, as after a search
+def test_ingest_into_existing_sink_runs_at_most_four_jobs(spark, tmp_path, spark_jobs):
+    # two flat queries: the observed count (one job) and the write, whose
+    # map stages run side by side; the sink's schema is already known to
+    # the session, as after a search
     sink, raw = str(tmp_path / "tbl"), str(tmp_path / "raw")
     ST.ingest_batch(_events(spark, _ROWS[:2]), sink)
     ST.read_table(spark, sink)
@@ -317,7 +306,152 @@ def test_ingest_into_existing_sink_runs_at_most_six_jobs(spark, tmp_path):
     ST.ingest_rawstore(lines, raw)
     ST.read_table(spark, raw)
 
-    batch = _ingest_jobs(spark, lambda: ST.ingest_batch(_events(spark, _ROWS), sink))
+    _, batch = spark_jobs(lambda: ST.ingest_batch(_events(spark, _ROWS), sink))
     more = spark.createDataFrame([("x",), ("x",), ("z",)], "value STRING")
-    rawstore = _ingest_jobs(spark, lambda: ST.ingest_rawstore(more, raw))
-    assert 0 < batch <= 6 and 0 < rawstore <= 6, (batch, rawstore)
+    _, rawstore = spark_jobs(lambda: ST.ingest_rawstore(more, raw))
+    assert 0 < batch <= 4 and 0 < rawstore <= 4, (batch, rawstore)
+
+
+def test_count_is_one_job(spark, spark_jobs):
+    seen = Observation()
+    staged = ST.with_ingest_columns(_events(spark, _ROWS), granularity="H")
+    _, n = spark_jobs(lambda: ST.partition_counts(staged, seen).write.format(
+        "noop").mode("overwrite").save())
+    assert n == 1
+    stats = seen.get
+    assert (stats["rows"], stats["dated"]) == (3, 3)
+    assert sorted(stats["parts"]) == ["2024010100", "2024010200", "2024010205"]
+
+
+def test_null_time_replay_is_dropped(spark, tmp_path):
+    # the existing-key read covers the null partition too
+    sink = str(tmp_path / "tbl")
+    df = _events(spark, [("a", 1, None), ("b", 2, "2024-01-01 00:00:00")])
+    assert ST.ingest_batch(df, sink).appended == 2
+    again = ST.ingest_batch(df, sink)
+    assert (again.appended, again.deduped) == (0, 2)
+    assert again.partitions == [20240101, None]
+    assert ST.read_table(spark, sink).count() == 2
+
+
+_BOUNDARY = dt.datetime(2024, 5, 5, 10, 59, 59, 999_999, tzinfo=dt.timezone.utc)
+
+
+def _pin_clock(monkeypatch):
+    # each read of the clock moves it a minute on: a call that read it
+    # twice would count one partition and write another
+    ticks = (_BOUNDARY + dt.timedelta(minutes=k) for k in range(100))
+    monkeypatch.setattr(ST, "_clock", lambda: next(ticks))
+
+
+def _assert_one_minute(result, path):
+    # the partitions reported are the directories written: the minute
+    # before the boundary, in the session time zone
+    dirs = sorted(
+        e.split("=", 1)[1] for e in os.listdir(path) if e.startswith("_part=")
+    )
+    assert result.partitions == dirs and len(dirs) == 1, (result.partitions, dirs)
+    assert dirs[0].endswith("59")
+
+
+def test_defaulted_time_is_read_once_per_call(spark, tmp_path, monkeypatch):
+    _pin_clock(monkeypatch)
+    sink = str(tmp_path / "tbl")
+    df = spark.createDataFrame([{"v": 1}, {"v": 2}])
+    r = ST.ingest_batch(df, sink, granularity="m")
+    _assert_one_minute(r, sink)
+    times = {row._time.timestamp() for row in ST.read_table(spark, sink).collect()}
+    assert times == {_BOUNDARY.timestamp()}
+
+
+def test_rawstore_defaulted_time_is_read_once_per_call(spark, tmp_path, monkeypatch):
+    _pin_clock(monkeypatch)
+    sink = str(tmp_path / "raw")
+    lines = spark.createDataFrame([("x",), ("y",)], "value STRING")
+    r = ST.ingest_rawstore(lines, sink, granularity="m")
+    _assert_one_minute(r, sink)
+    rows = ST.read_table(spark, sink).collect()
+    assert {(row._time.timestamp(), row._index_time.timestamp()) for row in rows} == {
+        (_BOUNDARY.timestamp(),) * 2
+    }
+
+
+# ---------------------------------------------------------------------------
+# Streaming ingest appends through the batch path: the sink anti-join
+# catches what the watermark-bounded state no longer holds.
+# ---------------------------------------------------------------------------
+
+_SCHEMA = "_idem STRING, v LONG, _time TIMESTAMP"
+
+
+def _write_json(path, rows):
+    with open(path, "w") as f:
+        for r in rows:
+            f.write(json.dumps(r) + "\n")
+
+
+def _stream_once(spark, src, sink, ckpt):
+    q = ST.ingest_stream(ST.json_lines_source(spark, src, _SCHEMA), sink, ckpt,
+                         trigger_once=True)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    return q
+
+
+def test_stream_replay_of_batch_ingested_keys_appends_nothing(spark, tmp_path):
+    src = tmp_path / "src"
+    src.mkdir()
+    sink = str(tmp_path / "sink")
+    ST.ingest_batch(_events(spark, _ROWS[:2]), sink)
+    _write_json(src / "f1.json", [
+        {"_idem": k, "v": v, "_time": t} for k, v, t in _ROWS
+    ])
+    _stream_once(spark, str(src), sink, str(tmp_path / "ckpt"))
+    got = sorted(r._idem for r in ST.read_table(spark, sink).collect())
+    assert got == ["a", "b", "c"]
+
+
+def test_rerun_micro_batch_appends_nothing(spark, tmp_path):
+    # a crash after the sink write and before the commit: Spark runs the
+    # micro-batch again from its offsets on restart
+    src = tmp_path / "src"
+    src.mkdir()
+    sink, ckpt = str(tmp_path / "sink"), tmp_path / "ckpt"
+    _write_json(src / "f1.json", [
+        {"_idem": k, "v": v, "_time": t} for k, v, t in _ROWS
+    ])
+    _stream_once(spark, str(src), sink, str(ckpt))
+    assert ST.read_table(spark, sink).count() == 3
+    for d, keep in (("commits", ()), ("offsets", ("0", ".0.crc"))):
+        for f in os.listdir(ckpt / d):
+            if f not in keep:
+                os.remove(ckpt / d / f)
+    q = _stream_once(spark, str(src), sink, str(ckpt))
+    assert [p["batchId"] for p in q.recentProgress if p["numInputRows"]] == [0]
+    assert ST.read_table(spark, sink).count() == 3
+
+
+def test_stream_state_stays_within_one_watermark_window(spark, tmp_path):
+    # 6 files of 20 new keys, a day apart, watermark 1 hour: a key leaves
+    # the state once the watermark passes it, so the state never holds
+    # more than the last two files' keys
+    src = tmp_path / "src"
+    src.mkdir()
+    sink = str(tmp_path / "sink")
+    q = ST.ingest_stream(ST.json_lines_source(spark, str(src), _SCHEMA), sink,
+                         str(tmp_path / "ckpt"))
+    try:
+        for day in range(1, 7):
+            _write_json(src / f"f{day}.json", [
+                {"_idem": f"{day}-{i}", "v": i, "_time": f"2024-01-0{day} 12:00:00"}
+                for i in range(20)
+            ])
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    state = [
+        p["stateOperators"][0]["numRowsTotal"]
+        for p in q.recentProgress if p["stateOperators"]
+    ]
+    assert len(state) >= 6 and max(state) <= 40, state
+    assert ST.read_table(spark, sink).count() == 120
