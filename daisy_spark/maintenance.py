@@ -20,9 +20,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
-import re
 import shutil
-import zoneinfo
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -96,48 +94,6 @@ def _partition_end(value: str) -> dt.datetime | None:
     return start + step
 
 
-#: the string forms a timestamp cast reads (Spark's stringToTimestamp):
-#: ``yyyy[-[m]m[-[d]d[( |T)[h]h:[m]m[:[s]s[.fraction]]]]]`` + an optional zone
-_TIMESTAMP = re.compile(
-    r"\s*(\d{4})(?:-(\d{1,2})(?:-(\d{1,2})(?:[ T](\d{1,2}):(\d{1,2})"
-    r"(?::(\d{1,2})(?:\.\d{0,9})?)?)?)?)?\s*(\S.*?)?\s*"
-)
-_OFFSET = re.compile(
-    r"(?:UTC|GMT|UT)?([+-])(\d{1,2})(?::?(\d{2}))?(?::?(\d{2}))?", re.I
-)
-
-
-def _zone(name: str) -> dt.tzinfo:
-    """A zone id as Spark reads one: ``Z``, ``UTC``/``GMT``/``UT``, an
-    offset (``+01:00``, ``-0530``, ``GMT+8``) or a region (``Europe/Oslo``)."""
-    if name.upper() in ("Z", "UTC", "GMT", "UT"):
-        return dt.timezone.utc
-    m = _OFFSET.fullmatch(name)
-    if m:
-        sign = -1 if m[1] == "-" else 1
-        offset = dt.timedelta(
-            hours=int(m[2]), minutes=int(m[3] or 0), seconds=int(m[4] or 0)
-        )
-        return dt.timezone(sign * offset)
-    return zoneinfo.ZoneInfo(name)
-
-
-def _cutoff_wall(spark: SparkSession, older_than: str) -> dt.datetime:
-    """``older_than`` cast to a timestamp, on the wall clock of the session
-    time zone (the one partition values are formatted in), truncated to
-    the second: what ``date_format(cast(older_than as timestamp))`` gives,
-    computed without a Spark job.  A string with no zone is read in the
-    session time zone, as the cast reads it."""
-    m = _TIMESTAMP.fullmatch(older_than)
-    if m is None:
-        raise ValueError(f"not a timestamp: {older_than!r}")
-    fields = (int(v or d) for v, d in zip(m.groups()[:6], (0, 1, 1, 0, 0, 0)))
-    session = _zone(spark.conf.get("spark.sql.session.timeZone"))
-    zone = _zone(m[7]) if m[7] else session
-    local = dt.datetime(*fields, tzinfo=zone)
-    return local.astimezone(session).replace(tzinfo=None)
-
-
 def apply_ttl(
     spark: SparkSession,
     path: str,
@@ -156,11 +112,18 @@ def apply_ttl(
     """
     df = read_parquet(spark, path)
     cutoff = F.lit(older_than).cast("timestamp")
-    before = df.count()
+    # the cutoff on the wall clock the partition values were formatted in
+    # (the session time zone), truncated to the second; a foldable column
+    # beside the count, so Spark's cast stays the one reader of the string
+    before, wall = df.agg(
+        F.count(F.lit(1)), F.date_format(cutoff, "yyyyMMddHHmmss")
+    ).first()
 
     dropped_dirs = 0
     if PARTITION_COL in df.columns:
-        cutoff_wall = _cutoff_wall(spark, older_than)
+        if wall is None:
+            raise ValueError(f"not a timestamp: {older_than!r}")
+        cutoff_wall = dt.datetime.strptime(wall, "%Y%m%d%H%M%S")
         kept = 0
         for entry in list(os.listdir(path)):
             if entry.startswith(f"{PARTITION_COL}="):
