@@ -1,4 +1,4 @@
-"""Table registry: name -> path, format, engine semantics.
+"""Table specs, test-table loading, and the per-session parquet schema resolver.
 
 The reference's tables are IStorage implementations whose engine choice
 (MergeTree / ReplacingMergeTree / SummingMergeTree / ...) carries
@@ -70,40 +70,6 @@ class TableSpec:
     partition_granularity: str | None = None  # M | D | H | m (TableRestRouterHandler.cpp:55-58)
     ttl: str | None = None  # e.g. "30 days" on time_column
     options: dict[str, str] = field(default_factory=dict)
-
-
-class Catalog:
-    """In-memory registry mapping table names to specs + temp views."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-        self.tables: dict[str, TableSpec] = {}
-
-    def register(self, spec: TableSpec, view: bool = True) -> None:
-        self.tables[spec.name] = spec
-        if view:
-            self.load(spec.name).createOrReplaceTempView(spec.name)
-
-    def load(self, name: str) -> DataFrame:
-        spec = self.tables[name]
-        if spec.fmt == "parquet" and not spec.options:
-            return normalize_nanos(spec.name, read_parquet(self.spark, spec.path))
-        _ensure_nanos_readable(self.spark)
-        reader = self.spark.read.format(spec.fmt)
-        if spec.options:
-            reader = reader.options(**spec.options)
-        return normalize_nanos(spec.name, reader.load(spec.path))
-
-    def register_dir(self, sf_dir: str, view: bool = True) -> None:
-        """Register every known test table found under ``sf_dir``."""
-        for name in TESTDATA_TABLES:
-            path = os.path.join(sf_dir, f"{name}.parquet")
-            if os.path.exists(path):
-                time_col = "ts" if name == "events" else None
-                self.register(
-                    TableSpec(name=name, path=path, time_column=time_col),
-                    view=view,
-                )
 
 
 #: columns stored as TIMESTAMP(NANOS) in the driver's parquet, which Spark
@@ -361,13 +327,3 @@ def load_table(
             pass  # other session / dropped — fall back to parquet
     path = os.path.join(sf_dir, f"{name}.parquet")
     return normalize_nanos(name, read_parquet(spark, path))
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load all test tables from ``sf_dir`` as DataFrames (no views)."""
-    out: dict[str, DataFrame] = {}
-    for name in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            out[name] = load_table(spark, sf_dir, name)
-    return out

@@ -1,17 +1,21 @@
-"""Function library: reference function names -> Spark Column expressions.
+"""Function library: Spark implementations of reference functions.
 
-Split by family:
+The one reference-name -> Spark mapping is the dialect's
+``plans.dialect.FUNC_MAP``; ``sql()``, ``api.search`` and the script
+engine resolve every function name through it.  This package holds what
+that mapping calls or cannot express as a template:
 
-- ``scalar``     arithmetic/comparison/conditional/conversion/date-time/
-                  string/array/JSON/hash/math/... (SURVEY §2.8)
-- ``aggregates`` aggregate functions incl. combinators (SURVEY §2.4)
+- ``scalar`` / ``aggregates``  Column builders the registry queries call,
+                  and those of names the dialect does not serve with a
+                  Spark expression (each module's docstring lists them)
 - ``timeseries`` windowFunnel, retention, sequenceMatch, rate, deltaSum,
                   histogram (SURVEY §2.4 time-series family)
+- ``stats``, ``states``  df-level statistical tests and -State/-Merge
+                  partial states
+- ``ch*``        exact reference algorithms (hashes, coding, geo, text,
+                  ...) as Python UDFs the script engine registers
+- ``nphash``     numpy hash kernels for pandas UDFs
 
-Every public callable takes/returns :class:`pyspark.sql.Column` so the
-whole library stays JVM-side (whole-stage codegen); no row-at-a-time
-Python UDFs.
+Column builders take and return :class:`pyspark.sql.Column`, so they stay
+JVM-side (whole-stage codegen).
 """
-
-from daisy_spark.functions import scalar, aggregates, timeseries  # noqa: F401
-from daisy_spark.functions.scalar import FUNCTIONS  # noqa: F401

@@ -2,8 +2,8 @@
 src/AggregateFunctions/AggregateFunctionTopK.h — exact-first here, since
 Catalyst's two-level aggregation replaces the sketch).
 
-The single-expression form in functions.aggregates.top_k collects each
-group's values into one buffer — fine for bounded groups, wrong for
+The dialect's single-expression ``topK(k)(x)`` folds each group's
+values in one buffer — fine for bounded groups, wrong for
 high-cardinality ones.  This operator is the scale path: count per
 (group, value) with map-side partial aggregation, then rank within group;
 both shuffles are on proper keys and no executor ever holds a whole group.

@@ -5949,7 +5949,10 @@ FUNC_MAP: dict[str, object] = {
         if a[1].startswith("'")
         else f"{a[0]}.col{a[1]}"
     ),
-    # hashing (values differ from reference — see functions.scalar)
+    # hashing fallback: _exact_hash_call folds literal arguments with the
+    # reference's algorithms (functions/chhash.py) and lowers dynamic
+    # cityHash64 exactly; the other dynamic calls land here, where
+    # xxhash64 stands in (values differ from the reference)
     "cityHash64": "xxhash64({*})", "sipHash64": "xxhash64({*})",
     "xxHash64": "xxhash64({*})", "halfMD5": "xxhash64({*})",
     "MD5": "md5({0})", "SHA256": "sha2({0}, 256)", "SHA1": "sha1({0})",
@@ -5986,7 +5989,7 @@ FUNC_MAP: dict[str, object] = {
     # the reference's uniq/uniqCombined are EXACT below their adaptive
     # sampling threshold (~tens of thousands) — every stateless test
     # sits under it, so exact counting reproduces their output; the
-    # 100-TB path stays functions/aggregates.uniq_* (HLL sketches)
+    # 100-TB path is an HLL sketch (approx_count_distinct)
     "uniq": lambda a: (
         f"count(DISTINCT {a[0]})"
         if len(a) == 1
@@ -6180,7 +6183,9 @@ FUNC_MAP: dict[str, object] = {
         + (a[0] if len(a) == 1 else _zip_arrays_struct(a))
         + "))))"
     ),
-    "sumMap": "map_from_arrays({0}, {1})",  # see aggregates.sum_map for the real op
+    # fallback only: _translate_expr folds sumMap as a real aggregate
+    # over the group (_agg_map_expr)
+    "sumMap": "map_from_arrays({0}, {1})",
     # misc
     "e": "exp(1)", "pi": "pi()", "sqrt": "sqrt({0})", "cbrt": "cbrt({0})",
     "exp2": "pow(CAST(2 AS DOUBLE), {0})",
@@ -10582,14 +10587,8 @@ def _translate_expr(toks: list[str], in_list: bool = False) -> list[str]:
                     continue
                 # pass through (Spark-native or user function)
                 out += [t, "("] + ([",".join(args)] if args else []) + [")"]
-            elif callable(tmpl):
-                out.append(tmpl(args))
             else:
-                s = str(tmpl)
-                s = s.replace("{*}", ", ".join(args) if args else "*")
-                for k, a in enumerate(args):
-                    s = s.replace("{" + str(k) + "}", a)
-                out.append(s)
+                out.append(_render_tmpl(tmpl, args))
             i = close + 1
             continue
         if t == "_sample_factor":
@@ -17530,8 +17529,9 @@ def _wrap_in_subqueries(sql_text: str) -> str:
 
 
 def sql(spark, query: str):
-    """Run reference-dialect SQL on a SparkSession (tables must be
-    registered as views, e.g. via Catalog.register_dir)."""
+    """Run reference-dialect SQL on a SparkSession.  Every table the
+    query reads must be registered as a temp view
+    (``df.createOrReplaceTempView(name)``)."""
     _SLEPT_CTX.set(False)
     res = translate(query)
     if res.settings:

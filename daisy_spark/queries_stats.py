@@ -66,8 +66,8 @@ FROM m ORDER BY event_type
 
 def q_map_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sumMap/minMap/maxMap via the df-level scale path (map_aggs_df):
-    explode + per-key partial agg, never a whole-group pair array. The
-    expression-level HOF forms stay for small in-array use + dialect."""
+    explode + per-key partial agg, never a whole-group pair array (the
+    dialect's sumMap/minMap/maxMap fold each group in one aggregate)."""
     li = _t(spark, sf_dir, "lineitem")
     keys = F.array(F.lit(1), F.lit(2))
     vals = F.array(F.col("l_quantity").cast("double"), F.col("l_extendedprice").cast("double"))
@@ -103,7 +103,7 @@ def q_moving_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """groupArrayMovingSum(3) semantics (AggregateFunctionMoving.h) on the
     windowed scale path: one shuffle on user_id, ROWS-frame running sum,
     no per-group array (the HOF aggregate form A.group_array_moving_sum
-    remains for in-array/dialect use on bounded groups)."""
+    serves bounded groups)."""
     e = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return (

@@ -25,7 +25,6 @@ from pyspark.sql import SparkSession
 SETTINGS_MAP = {
     "max_threads": ("spark.sql.shuffle.partitions", str),
     "max_memory_usage": ("spark.sql.adaptive.advisoryPartitionSizeInBytes", str),
-    "join_use_nulls": (None, None),  # semantic flag handled by operators.joins
 }
 
 DEFAULT_CONF = {
@@ -59,7 +58,7 @@ DEFAULT_CONF = {
     ),
     # test data carries TIMESTAMP(NANOS) parquet columns which Spark has no
     # native type for; read as long and convert at the catalog layer
-    # (catalog.load_tables / queries normalize to µs timestamps)
+    # (catalog.normalize_nanos converts them to µs timestamps)
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.ui.enabled": "false",
     "spark.driver.memory": "8g",
@@ -96,5 +95,5 @@ def apply_settings(spark: SparkSession, settings: dict[str, object]) -> None:
     """Apply reference-style settings to a live session (best effort)."""
     for name, value in settings.items():
         mapped = SETTINGS_MAP.get(name)
-        if mapped and mapped[0]:
+        if mapped:
             spark.conf.set(mapped[0], mapped[1](value))

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from daisy_spark.functions import aggregates as A
 from daisy_spark.functions import scalar as S
 from daisy_spark.functions import stats as ST
+from daisy_spark.plans import sql
 
 
 def test_geohash_known_vector(spark):
@@ -23,39 +24,36 @@ def test_geohash_known_vector(spark):
 def test_coding_scalars(spark):
     r = spark.range(1).select(
         S.mac_num_to_string(F.lit(0x0A1B2C3D4E5F)).alias("mac"),
-        S.mac_string_to_num(F.lit("0a:1b:2c:3d:4e:5f")).alias("macn"),
         S.bitmask_to_list(F.lit(50)).alias("bits"),
         S.ipv6_num_to_string(F.lit(bytes(range(16)))).alias("ip6"),
     ).collect()[0]
+    macn = sql(spark, "SELECT MACStringToNum('0a:1b:2c:3d:4e:5f') AS macn")
     assert r["mac"] == "0a:1b:2c:3d:4e:5f"
-    assert r["macn"] == 0x0A1B2C3D4E5F
+    assert macn.collect()[0]["macn"] == 0x0A1B2C3D4E5F
     assert r["bits"] == "2,16,32"
     assert r["ip6"] == "1:203:405:607:809:a0b:c0d:e0f"
 
 
 def test_bitmap_ops(spark):
-    arr = lambda *xs: F.array(*[F.lit(x) for x in xs])  # noqa: E731
-    r = spark.range(1).select(
-        S.bitmap_and(arr(1, 2, 3), arr(2, 3, 4)).alias("a"),
-        S.bitmap_or(arr(1, 2), arr(2, 3)).alias("o"),
-        S.bitmap_xor(arr(1, 2), arr(2, 3)).alias("x"),
-        S.bitmap_cardinality(arr(1, 1, 2)).alias("c"),
-        S.bitmap_has_all(arr(1, 2, 3), arr(1, 3)).alias("all_"),
+    r = sql(
+        spark,
+        "SELECT"
+        " bitmapToArray(bitmapAnd(bitmapBuild([1, 2, 3]), bitmapBuild([2, 3, 4]))) AS a,"
+        " bitmapToArray(bitmapOr(bitmapBuild([1, 2]), bitmapBuild([2, 3]))) AS o,"
+        " bitmapToArray(bitmapXor(bitmapBuild([1, 2]), bitmapBuild([2, 3]))) AS x,"
+        " bitmapCardinality(bitmapBuild([1, 1, 2])) AS c,"
+        " bitmapHasAll(bitmapBuild([1, 2, 3]), bitmapBuild([1, 3])) AS all_",
     ).collect()[0]
     assert sorted(r["a"]) == [2, 3] and sorted(r["o"]) == [1, 2, 3]
     assert sorted(r["x"]) == [1, 3] and r["c"] == 2 and r["all_"]
 
 
 def test_point_in_polygon(spark):
-    sq = F.array(
-        *[
-            F.struct(F.lit(float(a)).alias("x"), F.lit(float(b)).alias("y"))
-            for a, b in [(0, 0), (2, 0), (2, 2), (0, 2)]
-        ]
-    )
-    r = spark.range(1).select(
-        S.point_in_polygon(F.lit(1.0), F.lit(1.0), sq).alias("in_"),
-        S.point_in_polygon(F.lit(3.0), F.lit(1.0), sq).alias("out"),
+    sq = "[(0., 0.), (2., 0.), (2., 2.), (0., 2.)]"
+    r = sql(
+        spark,
+        f"SELECT pointInPolygon((1., 1.), {sq}) AS in_,"
+        f" pointInPolygon((3., 1.), {sq}) AS out",
     ).collect()[0]
     assert r["in_"] and not r["out"]
 
@@ -101,14 +99,19 @@ def test_ttests_match_closed_form(spark):
 
 
 def test_map_and_moving_aggs(spark):
+    _g(spark).createOrReplaceTempView("stats_g")
+    maps = sql(
+        spark,
+        "SELECT minMap([1], [v]) AS mn, maxMap([1], [v]) AS mx"
+        " FROM stats_g GROUP BY g",
+    ).collect()[0]
+    # the reference returns the (keys, values) tuple
+    assert tuple(maps["mn"]) == ([1], [1.0]) and tuple(maps["mx"]) == ([1], [9.0])
     out = _g(spark).groupBy("g").agg(
-        A.min_map(F.array(F.lit(1)), F.array(F.col("v"))).alias("mn"),
-        A.max_map(F.array(F.lit(1)), F.array(F.col("v"))).alias("mx"),
         A.group_array_moving_sum("v", F.col("i"), 3).alias("mv"),
         A.group_array_moving_avg("v", F.col("i"), 2).alias("ma"),
         A.group_array_insert_at(F.col("v"), F.col("i")).alias("ins"),
     ).collect()[0]
-    assert out["mn"][0]["value"] == 1.0 and out["mx"][0]["value"] == 9.0
     assert out["mv"][:4] == [3.0, 4.0, 8.0, 6.0]
     # reference semantics: divide by window size even for partial prefixes
     assert out["ma"][0] == 1.5 and out["ma"][1] == 2.0
@@ -130,33 +133,88 @@ def test_mann_whitney_and_rank_corr(spark):
     assert abs(mw["u0"] + mw["u1"] - 25.0) < 1e-9
     rc = ST.rank_corr_df(g, "v", "v", ["g"]).collect()[0]
     assert abs(rc["rank_corr"] - 1.0) < 1e-9  # self-correlation == 1
-    civ_col = _g(spark).groupBy("g").agg(
-        A.categorical_information_value(F.col("v") > 3, "s").alias("civ")
+    # the reference takes one 0/1 flag per category and returns one IV
+    # term per flag: the flags of both values of (v > 3) sum to the IV
+    g.createOrReplaceTempView("stats_g")
+    civ_sql = sql(
+        spark,
+        "SELECT categoricalInformationValue(v > 3, v <= 3, s) AS civ"
+        " FROM stats_g GROUP BY g",
     ).collect()[0]["civ"]
     civ_df = ST.categorical_information_value_df(
         g.withColumn("c", F.col("v") > 3), "c", "s", ["g"]
     ).collect()[0]["information_value"]
-    assert abs(civ_col - civ_df) < 1e-12
+    assert abs(sum(civ_sql) - civ_df) < 1e-12
 
 
 def test_registry_resolves(spark):
-    from daisy_spark.functions.aggregates import AGGREGATES
-    from daisy_spark.functions.scalar import FUNCTIONS
+    """One executed call per name: through the script engine where the
+    dialect serves the name, else through its Column builder."""
+    from daisy_spark.plans.script import ScriptRunner
 
-    for name in [
-        "minMap", "maxMap", "groupArrayMovingSum", "groupArrayInsertAt",
-        "groupBitmap", "uniqTheta", "welchTTest", "studentTTest",
-        "topKWeighted", "anyHeavy", "maxIntersections", "windowFunnel",
-        "deltaSumTimestamp", "categoricalInformationValue",
-    ]:
-        assert callable(AGGREGATES[name]), name
-    for name in [
-        "IPv6NumToString", "MACNumToString", "bitmaskToList", "bitmapBuild",
-        "bitmapXor", "greatCircleDistance", "pointInPolygon", "geohashEncode",
-        "ngramDistance", "neighbor", "runningDifference", "runningAccumulate",
-        "hostName", "version",
-    ]:
-        assert callable(FUNCTIONS[name]), name
+    calls = {
+        "minMap": "minMap([number % 2], [number])",
+        "maxMap": "maxMap([number % 2], [number])",
+        "groupBitmap": "groupBitmap(number)",
+        "welchTTest": "welchTTest(toFloat64(number), number % 2)",
+        "studentTTest": "studentTTest(toFloat64(number), number % 2)",
+        "topKWeighted": "topKWeighted(3)(number % 4, number)",
+        "anyHeavy": "anyHeavy(number % 3)",
+        "maxIntersections": "maxIntersections(number, number + 2)",
+        "windowFunnel": (
+            "windowFunnel(3)(toDateTime(number), number = 1, number = 2)"
+        ),
+        "deltaSumTimestamp": "deltaSumTimestamp(number, number)",
+        "categoricalInformationValue": (
+            "categoricalInformationValue(number > 3, number % 2)"
+        ),
+        "IPv6NumToString": (
+            "IPv6NumToString(unhex('000102030405060708090A0B0C0D0E0F'))"
+        ),
+        "MACNumToString": "MACNumToString(number)",
+        "bitmaskToList": "bitmaskToList(number)",
+        "bitmapBuild": "bitmapToArray(bitmapBuild([number, 1]))",
+        "bitmapXor": (
+            "bitmapToArray(bitmapXor(bitmapBuild([1, 2]), bitmapBuild([2, 3])))"
+        ),
+        "greatCircleDistance": (
+            "greatCircleDistance(2.3522, 48.8566, -0.1278, 51.5074)"
+        ),
+        "pointInPolygon": (
+            "pointInPolygon((1., 1.), [(0., 0.), (2., 0.), (2., 2.), (0., 2.)])"
+        ),
+        "geohashEncode": "geohashEncode(-5.60302734375, 42.60498046875, 5)",
+        "neighbor": "neighbor(number, 1)",
+        "runningDifference": "runningDifference(number)",
+        "hostName": "hostName()",
+        "version": "version()",
+    }
+    queries = {
+        name: f"SELECT {call} AS v FROM numbers(10)" for name, call in calls.items()
+    }
+    queries["runningAccumulate"] = (
+        "SELECT runningAccumulate(s) AS v FROM (SELECT sumState(number) AS s"
+        " FROM numbers(10) GROUP BY number ORDER BY number)"
+    )
+    runner = ScriptRunner(spark)
+    try:
+        for name, q in queries.items():
+            assert runner.execute(q).collect()[0]["v"] is not None, name
+    finally:
+        runner.close()
+    # names the dialect passes through unresolved
+    g = _g(spark)
+    aggs = g.agg(
+        A.group_array_moving_sum("v", F.col("i")).alias("groupArrayMovingSum"),
+        A.group_array_insert_at(F.col("v"), F.col("i")).alias("groupArrayInsertAt"),
+        A.uniq_theta("v").alias("uniqTheta"),
+    ).collect()[0]
+    ngram = g.select(
+        S.ngram_distance(F.col("g"), F.lit("a")).alias("ngramDistance")
+    ).collect()[0]
+    for row in (aggs, ngram):
+        for name, value in row.asDict().items():
+            assert value is not None, name
 
 
 def test_logistic_regression_learns_separable_boundary(spark):

@@ -6,7 +6,8 @@
 #
 # Usage:  tools/preflight.sh [--fast]
 #   default: full pytest suite (the round's hard gate)
-#   --fast:  corpus suite + dialect/script units only (~1 min), for
+#   --fast:  corpus suite, dialect/script units, the translate() golden
+#            net and the function-semantics cases (~1 min), for
 #            intermediate checkpoints; the FINAL commit needs the default.
 #
 # On success writes tools/preflight.ok with the CONTENT-TREE hash it
@@ -19,7 +20,8 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 
 if [[ "${1:-}" == "--fast" ]]; then
-    TARGETS=(tests/test_reference_corpus.py tests/test_dialect.py tests/test_script.py)
+    TARGETS=(tests/test_reference_corpus.py tests/test_dialect.py tests/test_script.py
+             tests/test_translate_golden.py tests/test_scalar_registry.py)
 else
     TARGETS=(tests/)
 fi
