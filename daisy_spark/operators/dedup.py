@@ -6,15 +6,21 @@ a training-data pipeline additionally needs *content* dedup: exact,
 MinHash-LSH, SimHash, and embedding-cosine near-duplicate detection.
 
 Everything here is DataFrame composition, mostly over JVM-side
-expressions (``xxhash64``, higher-order array functions).  The MinHash and
-random-hyperplane signatures are Arrow UDFs (one numpy pass per batch).
+expressions (``xxhash64``, higher-order array functions).  The MinHash,
+SimHash and random-hyperplane signatures are Arrow UDFs (one numpy pass
+per batch).  Higher-order functions (``transform``/``aggregate`` with a
+lambda) run interpreted per row, outside whole-stage codegen, so
+per-element index arithmetic is spelled out as flat literal-index
+expressions instead (a ``transform(sequence(...))`` band projection
+measured 2.2 s against 0.5 s for the flat form at sf0.1).
 There is no ``collect()`` and critically **never an all-pairs cartesian
 product**:
 
 - exact dedup is one hash-groupBy (map-side combine, one shuffle);
 - MinHash near-dup shuffles on *(band, band-hash)* buckets, so candidate
   generation is proportional to the number of colliding docs, not n²;
-- SimHash buckets on 16-bit signature bands the same way;
+- SimHash buckets on combinations of its 8-bit signature bands the same
+  way;
 - embedding near-dup buckets on random-hyperplane sign bands.
 
 At 100 TB the only scale hazard is a degenerate bucket (e.g. millions of
@@ -25,8 +31,12 @@ the same trade ES/Spark dedup pipelines make in practice.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import LongType
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -122,8 +132,7 @@ def with_minhash_signature(
     higher-order formulation — ``transform(seq, i ->
     array_min(transform(shingles, s -> xxhash64(s, i))))`` — both
     re-hashes every shingle STRING ``num_hashes`` times and runs
-    interpreted rather than compiled; same trap as SimHash, see
-    :func:`with_simhash`.)
+    interpreted rather than compiled; see the module docstring.)
     """
     from pyspark.sql import types as T
 
@@ -169,12 +178,7 @@ def minhash_signature_pandas(
     the 64×|shingles| hashing runs as vectorized uint64 numpy per batch
     (guide §4.2).
     """
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
     def _sig(arrs: "pd.Series") -> "pd.Series":
-        import numpy as np
-
         from daisy_spark.functions.nphash import hash_int, hash_long
 
         if len(arrs) == 0:
@@ -273,7 +277,7 @@ def minhash_candidates(
     (fan-out is quadratic in bucket size).
     """
     # flat literal-index band structs: the transform(sequence(...)) form
-    # runs interpreted per row (see with_simhash) — spell the bands out
+    # runs interpreted per row (module docstring) — spell the bands out
     band_structs = ", ".join(
         f"named_struct('band', {b}, "
         f"'bh', xxhash64(slice({sig_col}, {b * rows_per_band + 1}, {rows_per_band})))"
@@ -418,79 +422,74 @@ SIMHASH_BANDS = 8
 SIMHASH_BAND_BITS = 8
 
 
+def _simhash_vote(hashes: pd.Series) -> pd.Series:
+    """Packed 64-bit SimHash of each row's token-hash array: bit k is set
+    iff strictly more than half of the row's tokens have bit k set.  A
+    NULL or empty array casts no vote and packs to 0.  The body of
+    :func:`with_simhash`'s Arrow UDF."""
+    lens = np.fromiter(
+        (0 if a is None else len(a) for a in hashes), np.int64, len(hashes)
+    )
+    nonempty = lens > 0
+    starts = np.cumsum(lens) - lens
+    flat = np.concatenate(
+        [np.empty(0, "<i8")]
+        + [np.asarray(a, dtype="<i8") for a in hashes if a is not None]
+    )
+    # little-endian bytes: column j holds bits 8j..8j+7 of each hash, so
+    # one byte column at a time keeps the unpacked votes at 8 B per token
+    tok_bytes = flat.view(np.uint8).reshape(-1, 8)
+    packed = np.zeros((len(hashes), 8), np.uint8)
+    for j in range(8):
+        bits = np.unpackbits(tok_bytes[:, j, None], axis=1, bitorder="little")
+        ones = np.add.reduceat(bits, starts[nonempty], axis=0, dtype=np.int64)
+        packed[nonempty, j] = np.packbits(
+            2 * ones > lens[nonempty, None], axis=1, bitorder="little"
+        )[:, 0]
+    return pd.Series(packed.view("<i8")[:, 0])
+
+
 def with_simhash(
     df: DataFrame,
     text_col: str,
     id_col: str,
     out_col: str = "simhash",
-    bits: int = 64,
 ) -> DataFrame:
-    """64-bit SimHash per ``id_col``: each token votes ±1 on each bit of
-    its xxhash64; the signature keeps the sign of each bit-sum.
+    """64-bit SimHash per row: each whitespace token votes on each bit of
+    its ``xxhash64``; bit k is set iff more than half of the tokens have
+    it set.  A document with no tokens (NULL, empty or blank text) has no
+    votes and hashes to 0.
 
     Returns ``(id_col, out_col, out_col + '_h')`` — the banded signature
-    array (eight 8-bit values) and the packed 64-bit hash for Hamming
-    distance via xor/bit_count.
+    array (eight 8-bit values, band b = ``(h >> 8b) & 255``) and the
+    packed 64-bit hash ``h`` for Hamming distance via xor/bit_count.
 
-    Scale shape: one explode to token rows (each token hashed ONCE), then
-    a single groupBy(id) with 64 flat ``sum`` columns — all inside
-    whole-stage codegen with map-side partial aggregation, so the shuffle
-    carries one 64-counter row per doc per input partition.  (A nested
-    higher-order-function formulation is 100× slower: Catalyst interprets
-    deep lambda chains instead of compiling them.)
+    Plan shape: one narrow projection, no shuffle.  The JVM hashes the
+    tokens (``transform(..., t -> xxhash64(t))``, so the hash is Spark's
+    own and bit-exact by construction) and an Arrow UDF over
+    :func:`_simhash_vote` counts the 64 votes per document in numpy.  The
+    vote is a UDF because its Catalyst forms are large or slow: a
+    higher-order vote over the token array runs interpreted per row, and
+    the flat form (a token explode, a groupBy over 16-bit packed bit sums
+    and a 64-term projection) costs a shuffle and a large plan — at sf0.1
+    it took 0.35 s to build and 0.64 s to run, against 0.05 s and 0.29 s
+    here — and its lanes overflowed past 65,535 equal votes.  There is no
+    cap on tokens per document.
     """
-    toks = f"filter(split({text_col}, ' +'), t -> t != '')"
-    tok = df.select(
-        F.col(id_col), F.explode_outer(F.expr(toks)).alias("_t")
-    ).withColumn("_h", F.xxhash64("_t"))
-    # Lane-packed bit sums: 4 bit-counters per long in 16-bit lanes, so 16
-    # sum() buffers instead of 64 — smaller hash-agg rows and ~4× less
-    # codegen (the 64-column form measured 1.6× slower hot; a per-bit
-    # when() guard 4×; the nested-HOF form 100×, it runs interpreted).
-    # 16-bit lanes cap at 65535 tokens per doc — beyond the shingle size
-    # any near-dup pipeline feeds (docs are chunked upstream at scale).
-    assert bits == 64, "packed-lane simhash is fixed to 64 bits"
-
-    def lane(j: int):
-        e = None
-        for k in range(4):
-            bit = F.shiftright("_h", 4 * j + k).bitwiseAND(F.lit(1))
-            term = F.shiftleft(bit, 16 * k)
-            e = term if e is None else e + term
-        return F.sum(e).alias(f"_p{j}")
-
-    aggs = [lane(j) for j in range(16)] + [F.count("_t").alias("_n")]
-    counts = tok.groupBy(id_col).agg(*aggs)
-    # bit i set iff strictly more tokens vote 1 than 0 on bit i
-    bit_cols = ", ".join(
-        f"if(2 * (shiftright(_p{i // 4}, {16 * (i % 4)}) & 65535) > _n, 1L, 0L)"
-        for i in range(bits)
+    hashes = F.expr(
+        f"transform(filter(split({text_col}, ' +'), t -> t != ''), "
+        "t -> xxhash64(t))"
     )
-    # FLAT band/pack arithmetic with literal indices: higher-order
-    # functions (aggregate/transform over sequence) always run
-    # INTERPRETED — measured 2.2 s vs 0.5 s for this projection at
-    # sf0.1 — while the equivalent literal-index expression chain stays
-    # inside whole-stage codegen (same trap as the bit-sum aggregation
-    # above)
-    nbands, bb = SIMHASH_BANDS, SIMHASH_BAND_BITS
-    band_expr = "array(" + ", ".join(
-        "cast("
-        + " + ".join(
-            f"shiftleft(element_at(_sh_bits, {b * bb + i + 1}), {i})"
-            for i in range(bb)
-        )
-        + " as bigint)"
-        for b in range(nbands)
+    h = f"{out_col}_h"
+    bands = "array(" + ", ".join(
+        f"shiftright({h}, {SIMHASH_BAND_BITS * b}) & 255"
+        for b in range(SIMHASH_BANDS)
     ) + ")"
-    packed = " | ".join(
-        f"shiftleft(element_at({out_col}, {b + 1}), {b * bb})"
-        for b in range(nbands)
-    )
-    return (
-        counts.withColumn("_sh_bits", F.expr(f"array({bit_cols})"))
-        .withColumn(out_col, F.expr(band_expr))
-        .withColumn(f"{out_col}_h", F.expr(packed))
-        .select(id_col, out_col, f"{out_col}_h")
+    # a UDF object binds to the JVM of its first call, so it is made per
+    # call: one kept at module scope fails once its session's JVM stops
+    vote = pandas_udf(_simhash_vote, LongType())
+    return df.select(F.col(id_col), vote(hashes).alias(h)).select(
+        id_col, F.expr(bands).alias(out_col), h
     )
 
 
@@ -514,7 +513,10 @@ def simhash_candidates(
 
     Scale shape: explode to |combos| rows/doc, one shuffle on the combo
     key, join within buckets; ``max_bucket_size`` bounds degenerate-bucket
-    fan-out.
+    fan-out.  The bucket-size guard is a window count over the combo key,
+    so it runs on the exchange the self-join needs anyway: both join
+    sides are one plan and Spark reuses that exchange, one shuffle for
+    the guard and the join.
     """
     import itertools
 
@@ -533,20 +535,16 @@ def simhash_candidates(
     banded = df.select(
         F.col(id_col),
         F.col(f"{simhash_col}_h").alias("_h"),
-        F.explode(F.expr(f"array({combo_structs})")).alias("bb"),
-    ).select(id_col, "_h", F.col("bb.cid").alias("cid"), F.col("bb.key").alias("key"))
+        F.inline(F.expr(f"array({combo_structs})")),
+    )
 
     # SimHash buckets are FAT (8-bit keys ⇒ ≤256 buckets per combo), so
     # pair expansion stays in the codegen'd self-join — the in-row HOF
     # expansion used for MinHash (_bucket_pairs) runs interpreted and
     # measured slower here on exactly those fat buckets.
     if max_bucket_size is not None:
-        sizes = banded.groupBy("cid", "key").agg(F.count(F.lit(1)).alias("_n"))
-        banded = banded.join(
-            sizes.filter(F.col("_n") <= max_bucket_size).drop("_n"),
-            on=["cid", "key"],
-            how="left_semi",
-        )
+        n = F.count(F.lit(1)).over(Window.partitionBy("cid", "key"))
+        banded = banded.withColumn("_n", n).filter(F.col("_n") <= max_bucket_size)
 
     a, b = banded.alias("a"), banded.alias("b")
     return (
@@ -580,24 +578,24 @@ def simhash_dedup_pairs(
     only very similar docs — use it for J ≳ 0.9 duplicates; MinHash-LSH
     is the right tool for looser thresholds.
 
-    The signature frame is persisted: it is consumed three times (both
-    join sides + the bucket-size guard), and at corpus scale you would
-    materialize signatures to a table once anyway.
+    Nothing is persisted.  Each frame that is read twice — the
+    signatures on both sides of the bucket join, the hashed shingles on
+    both sides of the verify — is read through one exchange that Spark
+    reuses, so the signature UDF and the shingle hashing each run once
+    per call.  A persist would instead add a cache-building job per frame
+    and hide the reuse (13 Spark jobs per call against 7 at sf0.01,
+    local[3]).
     """
-    hashed = with_simhash(df, text_col, id_col).persist()
+    hashed = with_simhash(df, text_col, id_col)
     cand = simhash_candidates(hashed, id_col, max_hamming=max_hamming)
-    # verify consumes only the HASHED shingle arrays — hash once at
-    # materialization instead of once per join side (the transform is
-    # an interpreted higher-order function)
-    shingled = (
-        with_shingles(df, text_col, k=shingle_k)
-        .select(
-            id_col,
-            F.array_distinct(
-                F.transform(F.col("shingles"), lambda s: F.xxhash64(s))
-            ).alias("hshingles"),
-        )
-        .persist()
+    # verify consumes only the HASHED shingle arrays — hashed here, in
+    # the frame both join sides share, not once per side (the transform
+    # is an interpreted higher-order function)
+    shingled = with_shingles(df, text_col, k=shingle_k).select(
+        id_col,
+        F.array_distinct(
+            F.transform(F.col("shingles"), lambda s: F.xxhash64(s))
+        ).alias("hshingles"),
     )
     return jaccard_verify(
         cand.select("id1", "id2"),
@@ -648,8 +646,8 @@ def embedding_dedup_pairs(
     sig = with_hyperplane_signature(df, vec_col, planes=planes).select(
         F.col(id_col), F.col("_hp_sig")
     )
-    # flat literal-index band values (HOFs run interpreted — see
-    # with_simhash): bv(b) = Σ_i sig[b*rpb + i] << i spelled out
+    # flat literal-index band values (HOFs run interpreted — module
+    # docstring): bv(b) = Σ_i sig[b*rpb + i] << i spelled out
     band_structs = ", ".join(
         f"named_struct('band', {b}, 'bv', cast("
         + " + ".join(

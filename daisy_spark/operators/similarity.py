@@ -238,7 +238,7 @@ def lsh_ann_topk(
     """
     rows_per_band = planes // bands
     # flat literal-index band values: higher-order functions over
-    # sequence() run interpreted per row (see dedup.with_simhash) —
+    # sequence() run interpreted per row (dedup module docstring) —
     # the spelled-out shift/add chain stays in whole-stage codegen
     band_expr = "array(" + ", ".join(
         f"named_struct('band', {b}, 'bv', cast("

@@ -55,3 +55,13 @@ def test_query_matches_oracle(name, spark, sf_dir, duck):
 def test_rows_only_queries_run(name, spark, sf_dir):
     df = QUERIES[name](spark, sf_dir)
     assert df.count() >= 0
+
+
+def test_json_extract_parses_props_once(spark, sf_dir):
+    """The filter on the extracted key must not copy the JSON parse: the
+    executed plan parses ``props`` once per row."""
+    sdf = QUERIES["json_extract"](spark, sf_dir)
+    sdf.collect()
+    plan = sdf._jdf.queryExecution().executedPlan().executedPlan().toString()
+    parses = plan.count("json_tuple(") + plan.count("get_json_object(")
+    assert parses == 1, plan
