@@ -10,7 +10,9 @@ The inputs are:
   queries, read from the registry;
 - each ``SEARCHES`` kind of ``perfbench/ingest_search.py``, read from
   that file, over every event type and value bound it draws;
-- ``SHAPES`` below: SETTINGS placement, pipe stages and ASOF numbering.
+- ``SHAPES`` below: SETTINGS placement, pipe stages, ASOF numbering,
+  bracket nesting, joins, UNION and WITH TOTALS, and the combinator
+  names that have their own templates.
 
 Each query is translated in a fresh ``contextvars.Context``, so no
 context left by an earlier test reaches it.  It needs no SparkSession
@@ -52,6 +54,41 @@ SHAPES = [
     # ASOF aliases are numbered per statement
     "SELECT * FROM a ASOF JOIN b ON a.k = b.k AND a.t >= b.t "
     "UNION ALL SELECT * FROM c ASOF LEFT JOIN d ON c.k = d.k AND c.t < d.t",
+    # nested arrays and tuples: top-level commas, lambdas, ternaries
+    "SELECT [[1, 2], [3]] AS a, "
+    "arrayMap((x, y) -> x + y, [1, 2], [3, 4]) AS b",
+    "SELECT arrayMap(x -> x > 1 ? 'a' : 'b', [1, 2, 3]) AS c",
+    "SELECT arrayFilter((x, i) -> i > 1 AND x != 0, [4, 0, 5], [1, 2, 3]) "
+    "AS f",
+    "SELECT if(a > 0, [1, 2], [3]) AS r, tuple(1, 'a').2 AS e, "
+    "m['k'] AS v FROM t",
+    "SELECT * FROM t WHERE (a, b) IN ((1, 2), (3, 4))",
+    "SELECT a IN (1, 2, 3) AS m, (a, b) NOT IN ((1, 2)) AS n FROM t",
+    # literal folding and type inference
+    "SELECT cityHash64(CAST(1 AS UInt8), (1, 2), [3, 4]) AS h",
+    "SELECT toTypeName(CAST(1 AS Nullable(UInt8))) AS t1, "
+    "toTypeName([1, 2]) AS t2, toTypeName(1 ? 2 : 3) AS t3",
+    # ARRAY JOIN, JOIN ... ON inside a subquery and at top level
+    "SELECT s, x FROM t LEFT ARRAY JOIN arr AS x",
+    "SELECT s, x, y FROM t ARRAY JOIN arr AS x, [1, 2] AS y WHERE x > 0",
+    "SELECT s.a, v.b FROM (SELECT t.a, u.b FROM t JOIN u ON t.k = u.k) "
+    "AS s JOIN v ON s.a = v.a",
+    "SELECT * FROM t LEFT JOIN (SELECT k, max(b) AS mb FROM u GROUP BY k) "
+    "AS w ON t.k = w.k AND t.a > 1",
+    # UNION ALL with aliased first-part items; WITH TOTALS over a subquery
+    "SELECT a AS x, b + 1 AS y FROM t UNION ALL SELECT c, d FROM u",
+    "SELECT k, count() AS c FROM (SELECT number % 3 AS k FROM numbers(10)) "
+    "GROUP BY k WITH TOTALS",
+    "SELECT number, sum(number) OVER (PARTITION BY number % 2 "
+    "ORDER BY number) AS s FROM numbers(5)",
+    "SELECT count() FROM t GROUP BY a, b HAVING count() > (SELECT 1)",
+    # combinator names with their own templates
+    "SELECT groupUniqArrayArrayState(arr) AS s FROM t",
+    "SELECT groupUniqArrayStateArray(arr) AS s FROM t",
+    "SELECT groupUniqArrayForEachStateArray(arr) AS s FROM t",
+    "SELECT sumForEachStateForEachIfArrayIfState(a, b, c) AS s FROM t",
+    "SELECT sumForEachStateForEachIfArrayIfMerge(s) AS m FROM t",
+    "SELECT sumForEachMergeArray(s) AS m FROM t",
 ]
 
 
