@@ -375,20 +375,17 @@ def minhash_dedup_pairs(
     exact-Jaccard verify.  With 64 hashes / 16 bands of 4, detection
     probability at J=0.7 is 1-(1-0.7⁴)¹⁶ ≈ 0.986 and ≈ 1-4e-8 at J=0.9.
     """
-    # shingles feed the signature AND both verify sides; persist rather
-    # than re-shingle the corpus per consumer.  The verify-side hashed
-    # arrays are materialized HERE, once — the hashing transform is an
+    # shingles feed the signature AND both verify sides.  The verify-side
+    # hashed arrays are built HERE, once — the hashing transform is an
     # interpreted higher-order function, and leaving it inside
-    # jaccard_verify evaluated it once per join side
-    shingled = (
-        with_shingles(df, text_col, k=shingle_k)
-        .select(
-            id_col,
-            F.array_distinct(
-                F.transform(F.col("shingles"), lambda s: F.xxhash64(s))
-            ).alias("hshingles"),
-        )
-        .persist()
+    # jaccard_verify evaluated it once per join side.  No persist: the
+    # cache added its own jobs and hid Spark's exchange reuse, which
+    # already lets the consumers share one shingling pass
+    shingled = with_shingles(df, text_col, k=shingle_k).select(
+        id_col,
+        F.array_distinct(
+            F.transform(F.col("shingles"), lambda s: F.xxhash64(s))
+        ).alias("hshingles"),
     )
     # signature via the Arrow-batched numpy path: no explode, no
     # signature shuffle (the explode+groupBy form paid one exchange +

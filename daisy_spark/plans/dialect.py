@@ -204,36 +204,57 @@ def _match_paren(toks: list[str], i: int) -> int:
     raise DialectError("unbalanced parentheses")
 
 
+_CLOSER = {"(": ")", "[": "]"}
+
+
+def _top_level(toks: list[str], start: int = 0, stop: int | None = None,
+               brackets: str = "(["):
+    """Yield ``(j, tok)`` for each token of ``toks[start:stop]`` at
+    bracket depth 0, leaving out the brackets themselves.
+
+    ``brackets`` names the openers that count: ``"(["`` (the default)
+    nests on parentheses and square brackets, ``"("`` on parentheses
+    only, so ``[`` and ``]`` are yielded like any other token.  Depth
+    starts at 0 at ``start`` and may go negative on a stray closer;
+    nothing is yielded until it is back at 0.
+
+    Scans that need more than "is this token at depth 0" keep their own
+    counter: backward scans (which count closers up), scans that read
+    a depth other than 0 (matching a closer, or acting one level in),
+    and scans that copy tokens at every depth.
+    """
+    opens = tuple(brackets)
+    closes = tuple(_CLOSER[b] for b in brackets)
+    depth = 0
+    for j in range(*slice(start, stop).indices(len(toks))):
+        t = toks[j]
+        if t in opens:
+            depth += 1
+        elif t in closes:
+            depth -= 1
+        elif depth == 0:
+            yield j, t
+
+
+def _tail_at_top(toks: list[str]) -> bool:
+    """Whether the next-to-last token (the ``AS`` of a trailing
+    ``AS name``, the ``WITH`` of ``WITH TOTALS``) is at bracket depth 0,
+    i.e. the trailing pair belongs to the whole list."""
+    last = len(toks) - 2
+    return any(j == last for j, _ in _top_level(toks, stop=last + 1))
+
+
 def _split_top(toks: list[str], sep: str) -> list[list[str]]:
-    parts, cur, depth = [], [], 0
-    for t in toks:
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        if depth == 0 and t == sep:
-            parts.append(cur)
-            cur = []
-        else:
-            cur.append(t)
-    parts.append(cur)
-    return parts
-
-
-def _split_top_kw(toks: list[str], kw: str) -> list[list[str]]:
-    """Split a token list at top-level occurrences of a keyword."""
-    parts, cur, depth = [], [], 0
-    for t in toks:
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        if depth == 0 and _kw(t) == kw:
-            parts.append(cur)
-            cur = []
-        else:
-            cur.append(t)
-    parts.append(cur)
+    """Split a token list at its top-level ``sep`` tokens (depth over
+    ``(`` and ``[``).  A keyword ``sep`` (``"AND"``, ``"SETTINGS"``)
+    matches in any case; the separators are dropped, so ``n`` of them
+    give ``n + 1`` parts, empty ones included."""
+    parts, last = [], 0
+    for j, t in _top_level(toks):
+        if _kw(t) == sep:
+            parts.append(toks[last:j])
+            last = j + 1
+    parts.append(toks[last:])
     return parts
 
 
@@ -1121,10 +1142,7 @@ def _parse_hash_lit(toks: list[str]):
     ("array", [nodes]) | ("tuple", [nodes]); None when not a literal."""
     while (
         len(toks) >= 3 and toks[0] == "(" and _match_paren(toks, 0) == len(toks) - 1
-        and not any(
-            t == "," for k, t in enumerate(toks[1:-1])
-            if _paren_depth_at(toks[1:-1], k) == 0
-        )
+        and not any(t == "," for _, t in _top_level(toks, 1, -1))
     ):
         toks = toks[1:-1]
     if not toks:
@@ -1153,8 +1171,7 @@ def _parse_hash_lit(toks: list[str]):
     if head == "CAST" and len(toks) >= 3 and toks[1] == "(" and _match_paren(toks, 1) == len(toks) - 1:
         inner = toks[2:-1]
         as_idx = next(
-            (k for k, t in enumerate(inner)
-             if _kw(t) == "AS" and _paren_depth_at(inner, k) == 0),
+            (k for k, t in _top_level(inner) if _kw(t) == "AS"),
             None,
         )
         if as_idx is None:
@@ -1224,16 +1241,6 @@ def _parse_hash_lit(toks: list[str]):
             return None
         return ("array", subs)
     return None
-
-
-def _paren_depth_at(toks: list[str], idx: int) -> int:
-    d = 0
-    for t in toks[:idx]:
-        if t in ("(", "["):
-            d += 1
-        elif t in (")", "]"):
-            d -= 1
-    return d
 
 
 def _retype_hash_lit(sub, width: int, signed: bool):
@@ -2507,19 +2514,13 @@ def _ch_type_of(toks: list[str], env: dict[str, str]) -> str | None:
 
             bt_te = _s2c_te(re.sub(r"\s+", "", bt_te))
         if bt_te and bt_te.startswith("Tuple("):
-            els_te, d_te, cur_te = [], 0, ""
-            for ch_te in bt_te[6:-1]:
-                if ch_te == "(":
-                    d_te += 1
-                elif ch_te == ")":
-                    d_te -= 1
-                if ch_te == "," and d_te == 0:
-                    els_te.append(cur_te.strip())
-                    cur_te = ""
-                else:
-                    cur_te += ch_te
-            if cur_te.strip():
-                els_te.append(cur_te.strip())
+            in_te, els_te, cut_te = bt_te[6:-1], [], 0
+            for j_te, ch_te in _top_level(in_te, brackets="("):
+                if ch_te == ",":
+                    els_te.append(in_te[cut_te:j_te].strip())
+                    cut_te = j_te + 1
+            if in_te[cut_te:].strip():
+                els_te.append(in_te[cut_te:].strip())
             if 1 <= ix9_te <= len(els_te):
                 return els_te[ix9_te - 1]
             return None
@@ -2539,13 +2540,9 @@ def _ch_type_of(toks: list[str], env: dict[str, str]) -> str | None:
             if bt9 and bt9.startswith("Array(") and bt9 != "Array(?)":
                 return bt9[6:-1]
             if bt9 and bt9.startswith("Map(") and "," in bt9:
-                in9, dd9, cc9 = bt9[4:-1], 0, 0
-                for q9, ch9 in enumerate(in9):
-                    if ch9 == "(":
-                        dd9 += 1
-                    elif ch9 == ")":
-                        dd9 -= 1
-                    elif ch9 == "," and dd9 == 0:
+                in9, cc9 = bt9[4:-1], 0
+                for q9, ch9 in _top_level(in9, brackets="("):
+                    if ch9 == ",":
                         cc9 = q9 + 1
                 return in9[cc9:].strip()
             return None
@@ -2578,16 +2575,11 @@ def _ch_type_of(toks: list[str], env: dict[str, str]) -> str | None:
                 return f"Array({t_acc})"
             return None
     # ternary  c ? a : b  (lowest precedence)
-    depth = 0
     qpos = cpos = None
-    for k, t in enumerate(toks):
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif depth == 0 and t == "?" and qpos is None:
+    for k, t in _top_level(toks):
+        if t == "?" and qpos is None:
             qpos = k
-        elif depth == 0 and t == ":" and qpos is not None and cpos is None:
+        elif t == ":" and qpos is not None and cpos is None:
             cpos = k
     if qpos is not None and cpos is not None:
         return _ch_supertype(
@@ -2596,15 +2588,8 @@ def _ch_type_of(toks: list[str], env: dict[str, str]) -> str | None:
         )
     # top-level comparison / logical => UInt8 (Nullable when either
     # comparison operand is Nullable — 01055)
-    depth = 0
-    for k, t in enumerate(toks):
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif depth == 0 and t in (
-            "=", "==", "!=", "<>", "<", ">", "<=", ">=",
-        ):
+    for k, t in _top_level(toks):
+        if t in ("=", "==", "!=", "<>", "<", ">", "<=", ">="):
             lt_c = _ch_type_of(toks[:k], env)
             rt_c = _ch_type_of(toks[k + 1:], env)
             if (lt_c or "").startswith("Nullable(") or (
@@ -2612,21 +2597,16 @@ def _ch_type_of(toks: list[str], env: dict[str, str]) -> str | None:
             ).startswith("Nullable("):
                 return "Nullable(UInt8)"
             return "UInt8"
-        elif depth == 0 and _kw(t) in ("AND", "OR", "NOT", "LIKE", "IN"):
+        elif _kw(t) in ("AND", "OR", "NOT", "LIKE", "IN"):
             return "UInt8"
     # top-level decimal arithmetic: the reference keeps the DECIMAL
     # CLASS (Decimal32/64/128 by max precision) and max scale through
     # + - * (DecimalBinaryOperation); division's scale is the
     # numerator's.  Only the decimal case is inferred — int/float
     # arithmetic stays None (runtime fallback) to avoid overclaiming.
-    depth = 0
     arith = None  # (k, op) of the LAST lowest-precedence binary op
-    for k, t in enumerate(toks):
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif depth == 0 and t in ("+", "-", "*", "/", "%") and k > 0:
+    for k, t in _top_level(toks):
+        if t in ("+", "-", "*", "/", "%") and k > 0:
             prev = toks[k - 1]
             if prev in ("(", "[", ",", "+", "-", "*", "/", "%"):
                 continue  # unary sign
@@ -2823,11 +2803,7 @@ def _ch_type_of(toks: list[str], env: dict[str, str]) -> str | None:
         if head == "CAST":
             inner_toks = toks[2:-1]
             as_idx = next(
-                (
-                    k for k, tk in enumerate(inner_toks)
-                    if _kw(tk) == "AS"
-                    and _paren_depth_at(inner_toks, k) == 0
-                ),
+                (k for k, tk in _top_level(inner_toks) if _kw(tk) == "AS"),
                 None,
             )
             type_text = None
@@ -2943,13 +2919,8 @@ def _ch_type_of(toks: list[str], env: dict[str, str]) -> str | None:
                 return _ch_type_of(win, env)
             return None
     # modulo: ResultOfModulo = divisor's type family (small)
-    depth = 0
-    for k, t in enumerate(toks):
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif depth == 0 and t == "%" and 0 < k < len(toks) - 1:
+    for k, t in _top_level(toks):
+        if t == "%" and 0 < k < len(toks) - 1:
             tb = _ch_type_of(toks[k + 1 :], env)
             if tb and _ch_unwrap(tb) in _CH_NUM_ORDER:
                 return tb
@@ -3117,11 +3088,7 @@ def _subquery_type_env(from_toks: list[str]) -> dict[str, str]:
             if _kw(grp9[0]) == "WITH":
                 # skip the WITH prologue to the subquery's SELECT list
                 sel9 = next(
-                    (
-                        k for k, tt in enumerate(grp9)
-                        if _paren_depth_at(grp9, k) == 0
-                        and _kw(tt) == "SELECT"
-                    ),
+                    (k for k, tt in _top_level(grp9) if _kw(tt) == "SELECT"),
                     None,
                 )
                 if sel9 is None:
@@ -3131,9 +3098,8 @@ def _subquery_type_env(from_toks: list[str]) -> dict[str, str]:
             inner = grp9[1:]
             stop = next(
                 (
-                    k for k, t in enumerate(inner)
-                    if _paren_depth_at(inner, k) == 0
-                    and _kw(t) in (
+                    k for k, t in _top_level(inner)
+                    if _kw(t) in (
                         "FROM", "WHERE", "GROUP", "ORDER", "LIMIT",
                         "HAVING", "SETTINGS", "UNION",
                     )
@@ -3167,7 +3133,7 @@ def _subquery_type_env(from_toks: list[str]) -> dict[str, str]:
                 if (
                     len(item) >= 3 and _kw(item[-2]) == "AS"
                     and _is_ident(item[-1])
-                    and _paren_depth_at(item, len(item) - 2) == 0
+                    and _tail_at_top(item)
                 ):
                     t = _ch_type_of(item[:-2], sub_env)
                     if t is None and item and (
@@ -4592,19 +4558,13 @@ def _tuple_of_arrays(t: str | None) -> tuple[str, str] | None:
     (K/V may nest parens, e.g. Enum16('a' = 1))."""
     if not t or not t.startswith("Tuple(") or not t.endswith(")"):
         return None
-    inner, d, cur, parts = t[6:-1], 0, "", []
-    for ch in inner:
-        if ch == "(":
-            d += 1
-        elif ch == ")":
-            d -= 1
-        if ch == "," and d == 0:
-            parts.append(cur.strip())
-            cur = ""
-        else:
-            cur += ch
-    if cur.strip():
-        parts.append(cur.strip())
+    inner, cut, parts = t[6:-1], 0, []
+    for j, ch in _top_level(inner, brackets="("):
+        if ch == ",":
+            parts.append(inner[cut:j].strip())
+            cut = j + 1
+    if inner[cut:].strip():
+        parts.append(inner[cut:].strip())
     if len(parts) != 2:
         return None
     if not all(p.startswith("Array(") and p.endswith(")") for p in parts):
@@ -5218,6 +5178,27 @@ def _mjd_from_expr(a: list[str], or_null: bool) -> str:
         f"IF({a[0]} IS NULL, NULL, IF({ok}, {val}, "
         f"raise_error('fromModifiedJulianDay: day number out of range')))"
     )
+
+
+def _fe_matrix(col: str) -> str:
+    """A ForEach of sumForEach states over the finalized-state model: a
+    sumForEachState IS its per-position sum array, so the ForEach of
+    states is an array (by position) of elementwise-summed arrays over
+    the collected rows ``col``."""
+    ml = f"array_max(transform({col}, __fa -> size(__fa)))"
+    at = (
+        f"filter(transform({col}, __fa -> "
+        f"element_at(__fa, CAST(__fi AS INT))), "
+        f"__fv -> __fv IS NOT NULL)"
+    )
+    esum = (
+        f"aggregate({at}, CAST(NULL AS ARRAY<DOUBLE>), "
+        f"(__ac, __ar) -> IF(__ac IS NULL, "
+        f"transform(__ar, __v -> CAST(__v AS DOUBLE)), "
+        f"zip_with(__ac, __ar, (__x, __y) -> "
+        f"__x + CAST(__y AS DOUBLE))))"
+    )
+    return f"transform(sequence(1, {ml}), __fi -> {esum})"
 
 
 FUNC_MAP: dict[str, object] = {
@@ -6953,6 +6934,35 @@ FUNC_MAP: dict[str, object] = {
     "groupUniqArrayArray": (
         "array_distinct(flatten(collect_list({0})))"
     ),
+    # set-aggregate state fed per-element by -Array: the stored state is
+    # one distinct set of all row elements (00720 — order of -Array vs
+    # -State is immaterial here)
+    "groupUniqArrayStateArray": "array_distinct(flatten(collect_list({0})))",
+    "groupUniqArrayArrayState": "array_distinct(flatten(collect_list({0})))",
+    # per-position set states; -Array unwraps the outer array so each
+    # inner array is a ForEach input
+    "groupUniqArrayForEachStateArray": (
+        "transform(sequence(1, array_max(transform("
+        "flatten(collect_list({0})), __fa -> size(__fa)))), __fi -> "
+        "array_distinct(filter(transform(flatten(collect_list({0})), "
+        "__fa -> element_at(__fa, CAST(__fi AS INT))), "
+        "__fv -> __fv IS NOT NULL)))"
+    ),
+    # the 00545 combinator tower (see _fe_matrix); both -Ifs are row
+    # masks after the -Array unwrap
+    "sumForEachStateForEachIfArrayIfState": lambda a: _fe_matrix(
+        f"filter(flatten(collect_list(CASE WHEN CAST({a[2]} AS BOOLEAN) "
+        f"THEN zip_with({a[0]}, {a[1]}, (__d, __m) -> "
+        f"IF(CAST(__m AS BOOLEAN), __d, NULL)) END)), "
+        f"__kv -> __kv IS NOT NULL)"
+    ),
+    "sumForEachStateForEachIfArrayIfMerge": lambda a: _fe_matrix(
+        f"collect_list({a[0]})"
+    ),
+    # sumForEachMergeArray ≡ sumForEachArray here
+    "sumForEachMergeArray": lambda a: _agg_combinator_expr(
+        "sumForEachArray", a
+    ),
     # -Array combinator over TWO-argument argMin/argMax: all element
     # pairs across rows compete (AggregateFunctionArray + argMin)
     "argMinArray": (
@@ -7700,22 +7710,12 @@ def _rewrite_ternary(toks: list[str]) -> list[str]:
         return out
     # a top-level lambda arrow means the ternary is the lambda BODY:
     # keep `params ->` outside and rewrite only the body
-    depth = 0
-    for j, tk in enumerate(toks):
-        if tk in ("(", "["):
-            depth += 1
-        elif tk in (")", "]"):
-            depth -= 1
-        elif depth == 0 and tk == "->":
+    for j, tk in _top_level(toks):
+        if tk == "->":
             return toks[: j + 1] + _rewrite_ternary(toks[j + 1 :])
-    depth = 0
     q_idx = None
-    for j, tk in enumerate(toks):
-        if tk in ("(", "["):
-            depth += 1
-        elif tk in (")", "]"):
-            depth -= 1
-        elif depth == 0 and tk == "?":
+    for j, tk in _top_level(toks):
+        if tk == "?":
             q_idx = j
             break
     if q_idx is None:
@@ -7723,16 +7723,10 @@ def _rewrite_ternary(toks: list[str]) -> list[str]:
     # matching ':' — skip ':' of any nested '?' pairs
     pend = 1
     c_idx = None
-    depth = 0
-    for j in range(q_idx + 1, len(toks)):
-        tk = toks[j]
-        if tk in ("(", "["):
-            depth += 1
-        elif tk in (")", "]"):
-            depth -= 1
-        elif depth == 0 and tk == "?":
+    for j, tk in _top_level(toks, q_idx + 1):
+        if tk == "?":
             pend += 1
-        elif depth == 0 and tk == ":":
+        elif tk == ":":
             pend -= 1
             if pend == 0:
                 c_idx = j
@@ -7865,13 +7859,8 @@ def _translate_expr(toks: list[str], in_list: bool = False) -> list[str]:
             again_nc = True
             while again_nc:
                 again_nc = False
-                d_nc = 0
-                for k_nc, t_nc in enumerate(seg_nc):
-                    if t_nc in ("(", "["):
-                        d_nc += 1
-                    elif t_nc in (")", "]"):
-                        d_nc -= 1
-                    elif d_nc == 0 and t_nc in _CMP_NC:
+                for k_nc, t_nc in _top_level(seg_nc):
+                    if t_nc in _CMP_NC:
                         ls_nc, re_nc = _operand_span_nc(seg_nc, k_nc)
                         if _is_nan_tokens(
                             seg_nc[ls_nc:k_nc]
@@ -7918,7 +7907,7 @@ def _translate_expr(toks: list[str], in_list: bool = False) -> list[str]:
             if (
                 len(seg_dt) >= 3 and _kw(seg_dt[-2]) == "AS"
                 and _is_ident(seg_dt[-1])
-                and _paren_depth_at(seg_dt, len(seg_dt) - 2) == 0
+                and _tail_at_top(seg_dt)
             ):
                 alias_dt = seg_dt[-2:]
                 seg_dt = seg_dt[:-2]
@@ -7928,14 +7917,10 @@ def _translate_expr(toks: list[str], in_list: bool = False) -> list[str]:
                 and len(_split_top(seg_dt[1:-1], ",")) == 1
             ):
                 seg_dt = seg_dt[1:-1]
-            d_dt, pos_dt = 0, -1
-            for k_dt, tk_dt in enumerate(seg_dt):
-                if tk_dt in ("(", "["):
-                    d_dt += 1
-                elif tk_dt in (")", "]"):
-                    d_dt -= 1
-                elif (
-                    d_dt == 0 and tk_dt in ("-", "+") and k_dt > 0
+            pos_dt = -1
+            for k_dt, tk_dt in _top_level(seg_dt):
+                if (
+                    tk_dt in ("-", "+") and k_dt > 0
                     and seg_dt[k_dt - 1] not in (
                         "(", "[", ",", "+", "-", "*", "/", "%",
                     )
@@ -8182,20 +8167,14 @@ def _translate_expr(toks: list[str], in_list: bool = False) -> list[str]:
             and i + 1 < n
             and _kw(toks[i + 1]) not in ("IN", "LIKE", "RLIKE", "ILIKE", "BETWEEN", "EXISTS")
         ):
-            depth = 0
             end = n
             between_depth = 0  # BETWEEN a AND b: that AND is a binder
-            for j in range(i + 1, n):
-                tk = toks[j]
-                if tk in ("(", "["):
-                    depth += 1
-                elif tk in (")", "]"):
-                    depth -= 1
-                elif depth == 0 and _kw(tk) == "BETWEEN":
+            for j, tk in _top_level(toks, i + 1, n):
+                if _kw(tk) == "BETWEEN":
                     between_depth += 1
-                elif depth == 0 and _kw(tk) == "AND" and between_depth:
+                elif _kw(tk) == "AND" and between_depth:
                     between_depth -= 1
-                elif depth == 0 and (_kw(tk) in ("AND", "OR", "AS") or tk == ","):
+                elif _kw(tk) in ("AND", "OR", "AS") or tk == ",":
                     end = j
                     break
             inner = _emit(_translate_expr(toks[i + 1 : end]))
@@ -8580,13 +8559,9 @@ def _translate_expr(toks: list[str], in_list: bool = False) -> list[str]:
                     )
             elif ot and ot.startswith("Map(") and "," in ot:
                 # value type = last depth-0 comma part of Map(K, V)
-                inner_t, d0, cut = ot[4:-1], 0, 0
-                for k0, ch0 in enumerate(inner_t):
-                    if ch0 == "(":
-                        d0 += 1
-                    elif ch0 == ")":
-                        d0 -= 1
-                    elif ch0 == "," and d0 == 0:
+                inner_t, cut = ot[4:-1], 0
+                for k0, ch0 in _top_level(inner_t, brackets="("):
+                    if ch0 == ",":
                         cut = k0 + 1
                 vdef = _typed_default_sql(inner_t[cut:].strip())
                 out.append(
@@ -8715,14 +8690,9 @@ def _translate_expr(toks: list[str], in_list: bool = False) -> list[str]:
                 )
 
             # find top-level AS
-            depth = 0
             as_idx = None
-            for j, tk in enumerate(inner):
-                if tk == "(":
-                    depth += 1
-                elif tk == ")":
-                    depth -= 1
-                elif depth == 0 and _kw(tk) == "AS":
+            for j, tk in _top_level(inner, brackets="("):
+                if _kw(tk) == "AS":
                     as_idx = j
             if as_idx is None:
                 # reference 2-arg form: CAST(x, 'Type')
@@ -9631,13 +9601,8 @@ def _translate_expr(toks: list[str], in_list: bool = False) -> list[str]:
             # the decimal-truncation hop applies (DecimalBinaryOperation)
             if t == "divide" and len(arg_parts) == 2:
                 def _wrap_div(ts9: list[str]) -> list[str]:
-                    d9w = 0
-                    for tk9 in ts9:
-                        if tk9 in ("(", "["):
-                            d9w += 1
-                        elif tk9 in (")", "]"):
-                            d9w -= 1
-                        elif d9w == 0 and (
+                    for _, tk9 in _top_level(ts9):
+                        if (
                             tk9 in ("+", "-", "*", "/", "%")
                             or _kw(tk9) in ("AND", "OR")
                         ):
@@ -9912,15 +9877,10 @@ def _translate_expr(toks: list[str], in_list: bool = False) -> list[str]:
                         arg_parts[1], _TYPE_ENV_CTX.get() or _TYPE_ENV_DEFAULT
                     )
                     if tt8 and tt8.startswith("Tuple("):
-                        d8c, n8c = 0, 1
-                        for ch8 in tt8[6:-1]:
-                            if ch8 == "(":
-                                d8c += 1
-                            elif ch8 == ")":
-                                d8c -= 1
-                            elif ch8 == "," and d8c == 0:
-                                n8c += 1
-                        ar8 = n8c
+                        ar8 = 1 + sum(
+                            ch8 == ","
+                            for _, ch8 in _top_level(tt8, 6, -1, brackets="(")
+                        )
                 if ar8 is None:
                     raise DialectError(
                         "tupleHammingDistance: tuple arity unknown"
@@ -10336,73 +10296,6 @@ def _translate_expr(toks: list[str], in_list: bool = False) -> list[str]:
                 # SQL-compat alias names are case-insensitive in the
                 # reference (EXTRACT, Locate, UCASE, DATE_DIFF, ...)
                 tmpl = FUNC_MAP.get(t.lower())
-            if tmpl is None and t in (
-                "groupUniqArrayStateArray", "groupUniqArrayArrayState",
-            ):
-                # set-aggregate state fed per-element by -Array: the
-                # stored state is one distinct set of all row elements
-                # (00720 — order of -Array vs -State is immaterial here)
-                tmpl = "array_distinct(flatten(collect_list({0})))"
-            if tmpl is None and t in (
-                "sumForEachStateForEachIfArrayIfState",
-                "sumForEachStateForEachIfArrayIfMerge",
-                "sumForEachMergeArray",
-            ):
-                # the 00545 combinator tower over the finalized-state
-                # model: a sumForEachState IS its per-position sum
-                # array, so the ForEach-of-states is an array (position)
-                # of elementwise-summed arrays; -Array unwraps the outer
-                # array, both -Ifs are row masks after the unwrap
-                def _fe_matrix(col9: str) -> str:
-                    ml9 = (
-                        f"array_max(transform({col9}, "
-                        f"__fa -> size(__fa)))"
-                    )
-                    at9 = (
-                        f"filter(transform({col9}, __fa -> "
-                        f"element_at(__fa, CAST(__fi AS INT))), "
-                        f"__fv -> __fv IS NOT NULL)"
-                    )
-                    esum9 = (
-                        f"aggregate({at9}, CAST(NULL AS ARRAY<DOUBLE>), "
-                        f"(__ac, __ar) -> IF(__ac IS NULL, "
-                        f"transform(__ar, __v -> CAST(__v AS DOUBLE)), "
-                        f"zip_with(__ac, __ar, (__x, __y) -> "
-                        f"__x + CAST(__y AS DOUBLE))))"
-                    )
-                    return (
-                        f"transform(sequence(1, {ml9}), __fi -> {esum9})"
-                    )
-
-                if t == "sumForEachStateForEachIfArrayIfState":
-                    tmpl = lambda a: _fe_matrix(  # noqa: E731
-                        f"filter(flatten(collect_list(CASE WHEN "
-                        f"CAST({a[2]} AS BOOLEAN) THEN "
-                        f"zip_with({a[0]}, {a[1]}, (__d, __m) -> "
-                        f"IF(CAST(__m AS BOOLEAN), __d, NULL)) END)), "
-                        f"__kv -> __kv IS NOT NULL)"
-                    )
-                elif t == "sumForEachStateForEachIfArrayIfMerge":
-                    tmpl = lambda a: _fe_matrix(  # noqa: E731
-                        f"collect_list({a[0]})"
-                    )
-                else:  # sumForEachMergeArray ≡ sumForEachArray here
-                    tmpl = lambda a: (  # noqa: E731
-                        _agg_combinator_expr("sumForEachArray", a)
-                    )
-            if tmpl is None and t == "groupUniqArrayForEachStateArray":
-                # per-position set states; -Array unwraps the outer
-                # array so each inner array is a ForEach input
-                col_fs = "flatten(collect_list({0}))"
-                ml_fs = f"array_max(transform({col_fs}, __fa -> size(__fa)))"
-                one_fs = (
-                    f"array_distinct(filter(transform({col_fs}, "
-                    f"__fa -> element_at(__fa, CAST(__fi AS INT))), "
-                    f"__fv -> __fv IS NOT NULL))"
-                )
-                tmpl = (
-                    f"transform(sequence(1, {ml_fs}), __fi -> {one_fs})"
-                )
             if tmpl is None and re.fullmatch(
                 r"(\w+?)Merge(State|OrNull)", t
             ):
@@ -10622,9 +10515,8 @@ def _subq_select_arity(inner: list[str]) -> int:
         return 0
     stop9 = next(
         (
-            k for k, x in enumerate(inner)
-            if _paren_depth_at(inner, k) == 0 and k > 0
-            and _kw(x) in ("FROM", "WHERE", "LIMIT", "SETTINGS")
+            k for k, x in _top_level(inner, 1)
+            if _kw(x) in ("FROM", "WHERE", "LIMIT", "SETTINGS")
         ),
         len(inner),
     )
@@ -11451,19 +11343,11 @@ def _bool_arith_pass(toks: list[str]) -> list[str]:
     res = list(toks)
 
     def _has_cmp(inner: list[str]) -> bool:
-        d9 = 0
-        for t9 in inner:
-            if t9 == "(":
-                d9 += 1
-            elif t9 == ")":
-                d9 -= 1
-            elif d9 == 0:
-                if t9 in _CMP_OPS_DT:
-                    return True
-                if _kw(t9) in (
-                    "AND", "OR", "CASE", "SELECT", "BETWEEN", ",",
-                ):
-                    return False
+        for _, t9 in _top_level(inner, brackets="("):
+            if t9 in _CMP_OPS_DT:
+                return True
+            if _kw(t9) in ("AND", "OR", "CASE", "SELECT", "BETWEEN", ","):
+                return False
         return False
 
     i = 1
@@ -11589,21 +11473,15 @@ def _boolify_logic_operands(toks: list[str]) -> list[str]:
     n = len(toks)
     # fast path: no depth-0 logical separator
     seps: list[int] = []
-    depth = 0
     between = 0
-    for i, t in enumerate(toks):
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif depth == 0:
-            k = _kw(t)
-            if k == "BETWEEN":
-                between += 1
-            elif k == "AND" and between:
-                between -= 1
-            elif k in ("AND", "OR"):
-                seps.append(i)
+    for i, t in _top_level(toks, brackets="("):
+        k = _kw(t)
+        if k == "BETWEEN":
+            between += 1
+        elif k == "AND" and between:
+            between -= 1
+        elif k in ("AND", "OR"):
+            seps.append(i)
     if not seps:
         return list(toks)
     sepset = set(seps)
@@ -11666,17 +11544,10 @@ def _boolify_logic_operands(toks: list[str]) -> list[str]:
             and _match_paren(core, 0) == len(core) - 1
         ):
             core = core[1:-1]
-        d = 0
-        boolish = False
-        for t in core:
-            if t == "(":
-                d += 1
-            elif t == ")":
-                d -= 1
-            elif d == 0 and _kw(t) in _BOOLIFY_BOOLISH:
-                boolish = True
-                break
-        if boolish:
+        if any(
+            _kw(t) in _BOOLIFY_BOOLISH
+            for _, t in _top_level(core, brackets="(")
+        ):
             continue
         # a bare string literal operand is the reference's
         # ILLEGAL_TYPE_OF_ARGUMENT (error 43, FunctionsLogical.cpp) —
@@ -11837,15 +11708,9 @@ def _parse_select(toks: list[str]) -> _Select:
                 bucket[attr] = _hoist_aj(bucket[attr])
     q.from_ = bucket.get("FROM", [])
     # trailing [LEFT] ARRAY JOIN in the FROM clause (ArrayJoinAction.cpp)
-    depth = 0
-    for j, tk in enumerate(q.from_):
-        if tk in ("(", "["):
-            depth += 1
-        elif tk in (")", "]"):
-            depth -= 1
-        elif (
-            depth == 0
-            and _kw(tk) == "ARRAY"
+    for j, tk in _top_level(q.from_):
+        if (
+            _kw(tk) == "ARRAY"
             and j + 1 < len(q.from_)
             and _kw(q.from_[j + 1]) == "JOIN"
         ):
@@ -11864,7 +11729,7 @@ def _parse_select(toks: list[str]) -> _Select:
         if (
             len(lst9) >= 3 and _kw(lst9[-2]) == "AS"
             and _is_ident(lst9[-1])
-            and _paren_depth_at(lst9, len(lst9) - 2) == 0
+            and _tail_at_top(lst9)
         ):
             al9 = lst9[-1]
             expr9w = lst9[:-2]
@@ -11901,7 +11766,7 @@ def _parse_select(toks: list[str]) -> _Select:
         if (
             len(_lst) >= 2 and _kw(_lst[-2]) == "WITH"
             and _kw(_lst[-1]) == "TOTALS"
-            and _paren_depth_at(_lst, len(_lst) - 2) == 0
+            and _tail_at_top(_lst)
         ):
             q.with_totals = True
             del _lst[-2:]
@@ -11933,7 +11798,7 @@ def _parse_select(toks: list[str]) -> _Select:
     if (
         len(q.having) >= 3 and _kw(q.having[-2]) == "AS"
         and _is_ident(q.having[-1])
-        and _paren_depth_at(q.having, len(q.having) - 2) == 0
+        and _tail_at_top(q.having)
     ):
         # `HAVING expr AS x` (00529) — the alias slot doesn't exist in
         # Spark; drop it
@@ -12169,14 +12034,9 @@ def _parse_select(toks: list[str]) -> _Select:
         lim = lim[:-2]
     if lim:
         # LIMIT n BY cols | LIMIT n | LIMIT o, n
-        depth = 0
         by_idx = None
-        for j, tk in enumerate(lim):
-            if tk == "(":
-                depth += 1
-            elif tk == ")":
-                depth -= 1
-            elif depth == 0 and _kw(tk) == "BY":
+        for j, tk in _top_level(lim, brackets="("):
+            if _kw(tk) == "BY":
                 by_idx = j
                 break
         if by_idx is not None:
@@ -12238,15 +12098,9 @@ def _extract_fill(
     fill = None
     for it in items:
         idx = None
-        d = 0
-        for j, t in enumerate(it):
-            if t in ("(", "["):
-                d += 1
-            elif t in (")", "]"):
-                d -= 1
-            elif (
-                d == 0
-                and _kw(t) == "WITH"
+        for j, t in _top_level(it):
+            if (
+                _kw(t) == "WITH"
                 and j + 1 < len(it)
                 and _kw(it[j + 1]) == "FILL"
             ):
@@ -12274,18 +12128,14 @@ def _extract_fill(
             if kw not in ("FROM", "TO", "STEP"):
                 raise DialectError(f"unexpected WITH FILL token {tail[k]!r}")
             k += 1
-            grp: list[str] = []
-            d2 = 0
-            while k < len(tail):
-                t2 = tail[k]
-                if t2 in ("(", "["):
-                    d2 += 1
-                elif t2 in (")", "]"):
-                    d2 -= 1
-                if d2 == 0 and _kw(t2) in ("FROM", "TO", "STEP"):
-                    break
-                grp.append(t2)
-                k += 1
+            stop = next(
+                (
+                    j for j, t2 in _top_level(tail, k)
+                    if _kw(t2) in ("FROM", "TO", "STEP")
+                ),
+                len(tail),
+            )
+            grp, k = tail[k:stop], stop
             if any(_kw(g) == "INTERVAL" for g in grp):
                 raise DialectError(
                     "WITH FILL with an INTERVAL step is not supported in "
@@ -12380,13 +12230,8 @@ def _is_boolish(txt: str) -> bool:
         toks = toks[1:-1]
     if toks and _kw(toks[0]) in ("CASE", "IF"):
         return False  # conditionals carry inner comparisons, any type
-    depth = 0
-    for t in toks:
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif depth == 0 and (
+    for _, t in _top_level(toks, brackets="("):
+        if (
             t in ("=", "<", ">", "<=", ">=", "<>", "!=", "==")
             or _kw(t) in _BOOLISH_KW
         ):
@@ -12764,15 +12609,9 @@ def _is_query_tokens(inner: list[str]) -> bool:
         return True
     if inner[0] != "(":
         return False
-    d = 0
-    for tk in inner:
-        if tk == "(":
-            d += 1
-        elif tk == ")":
-            d -= 1
-        elif d == 0 and _kw(tk) == "UNION":
-            return True
-    return False
+    return any(
+        _kw(tk) == "UNION" for _, tk in _top_level(inner, brackets="(")
+    )
 
 
 def _asof_pop_left(out: list[str]):
@@ -13310,27 +13149,20 @@ def _translate_from(toks: list[str]) -> list[str]:
                         "ANY JOIN ON needs an aliased right side"
                     )
                 k += 1
-                cond_toks: list[str] = []
-                depth2 = 0
-                while k < n:
-                    tk = toks[k]
-                    if tk == "(":
-                        depth2 += 1
-                    elif tk == ")":
-                        depth2 -= 1
-                    if depth2 == 0 and (
-                        tk == ","
-                        or _kw(tk) in (
+                stop = next(
+                    (
+                        j for j, tk in _top_level(toks, k, n, brackets="(")
+                        if tk == "," or _kw(tk) in (
                             "JOIN", "INNER", "LEFT", "RIGHT", "FULL",
                             "CROSS", "ASOF", "SEMI", "ANTI", "ANY",
                         )
-                    ):
-                        break
-                    cond_toks.append(tk)
-                    k += 1
+                    ),
+                    max(k, n),
+                )
+                cond_toks, k = toks[k:stop], stop
                 cond_t = _translate_expr(cond_toks)
                 rkeys: list[str] = []
-                for cj in _split_top_kw(cond_t, "AND"):
+                for cj in _split_top(cond_t, "AND"):
                     while (
                         len(cj) >= 3 and cj[0] == "("
                         and _match_paren(cj, 0) == len(cj) - 1
@@ -13381,7 +13213,7 @@ def _translate_from(toks: list[str]) -> list[str]:
                     pop_l = _asof_pop_left(out)
                     start_l, left_sql, l_alias = pop_l
                     lkeys: list[str] = []
-                    for cj in _split_top_kw(cond_t, "AND"):
+                    for cj in _split_top(cond_t, "AND"):
                         while (
                             len(cj) >= 3 and cj[0] == "("
                             and _match_paren(cj, 0) == len(cj) - 1
@@ -13577,41 +13409,23 @@ def _translate_from(toks: list[str]) -> list[str]:
             side = "LEFT" if "LEFT" in dirs else "INNER"
             if k < n and _kw(toks[k]) == "ON":
                 k += 1
-                cond_toks: list[str] = []
-                depth2 = 0
-                while k < n:
-                    tk = toks[k]
-                    if tk == "(":
-                        depth2 += 1
-                    elif tk == ")":
-                        depth2 -= 1
-                    if depth2 == 0 and (
-                        tk == ","
-                        or _kw(tk) in (
+                stop = next(
+                    (
+                        j for j, tk in _top_level(toks, k, n, brackets="(")
+                        if tk == "," or _kw(tk) in (
                             "JOIN", "INNER", "LEFT", "RIGHT", "FULL",
                             "CROSS", "ASOF", "SEMI", "ANTI",
                         )
-                    ):
-                        break
-                    cond_toks.append(tk)
-                    k += 1
+                    ),
+                    max(k, n),
+                )
+                cond_toks, k = toks[k:stop], stop
                 cond_t = _translate_expr(cond_toks)
                 # derive match ordering from the inequality conjunct that
                 # references the right side: left >= right.t means "latest
                 # right at or before left" -> ORDER BY right.t DESC
                 order_sql = None
-                conjs, cur_c, d3 = [], [], 0
-                for tk in cond_t:
-                    if tk in ("(", "["):
-                        d3 += 1
-                    elif tk in (")", "]"):
-                        d3 -= 1
-                    if d3 == 0 and _kw(tk) == "AND":
-                        conjs.append(cur_c)
-                        cur_c = []
-                    else:
-                        cur_c.append(tk)
-                conjs.append(cur_c)
+                conjs = _split_top(cond_t, "AND")
 
                 def _refs_alias(ts: list[str]) -> bool:
                     return any(
@@ -13632,14 +13446,9 @@ def _translate_from(toks: list[str]) -> list[str]:
                         and _match_paren(cj, 0) == len(cj) - 1
                     ):
                         cj = cj[1:-1]
-                    d4 = 0
                     found = False
-                    for m, tk in enumerate(cj):
-                        if tk in ("(", "["):
-                            d4 += 1
-                        elif tk in (")", "]"):
-                            d4 -= 1
-                        elif d4 == 0 and tk in (">=", ">", "<=", "<"):
+                    for m, tk in _top_level(cj):
+                        if tk in (">=", ">", "<=", "<"):
                             found = True
                             lop, rop = cj[:m], cj[m + 1 :]
                             if _refs_alias(rop) and not _refs_alias(lop):
@@ -13663,7 +13472,7 @@ def _translate_from(toks: list[str]) -> list[str]:
                             else:
                                 clean = False
                             break
-                        elif d4 == 0 and tk in ("=", "=="):
+                        elif tk in ("=", "=="):
                             found = True
                             lop, rop = cj[:m], cj[m + 1 :]
                             if _refs_alias(rop) and not _refs_alias(lop):
@@ -13803,26 +13612,18 @@ def _translate_from(toks: list[str]) -> list[str]:
         ):
             # JOIN ON condition: run through the expression translator so
             # reference functions (toUInt32(...), etc.) lower properly
-            k2 = i + 1
-            cond_toks2: list[str] = []
-            d5 = 0
-            while k2 < n:
-                tk2 = toks[k2]
-                if tk2 == "(":
-                    d5 += 1
-                elif tk2 == ")":
-                    d5 -= 1
-                if d5 == 0 and (
-                    tk2 == ","
-                    or _kw(tk2) in (
+            k2 = next(
+                (
+                    j for j, tk2 in _top_level(toks, i + 1, n, brackets="(")
+                    if tk2 == "," or _kw(tk2) in (
                         "JOIN", "INNER", "LEFT", "RIGHT", "FULL", "CROSS",
                         "ASOF", "SEMI", "ANTI", "GLOBAL", "ANY", "ALL",
                         "ARRAY", "USING",
                     )
-                ):
-                    break
-                cond_toks2.append(tk2)
-                k2 += 1
+                ),
+                max(i + 1, n),
+            )
+            cond_toks2 = toks[i + 1 : k2]
             out += ["ON"] + _translate_expr(cond_toks2)
             i = k2
             continue
@@ -13910,7 +13711,7 @@ def _subst_aliases_into_typefns(sel: list[str]) -> list[str]:
             k += 1
         if (
             len(it) >= 3 and _kw(it[-2]) == "AS" and _is_ident(it[-1])
-            and _paren_depth_at(it, len(it) - 2) == 0
+            and _tail_at_top(it)
         ):
             aliases[it[-1].strip('`"')] = it[:-2]
         if out:
@@ -14792,18 +14593,13 @@ def _split_single_join(f: list[str]) -> tuple[
     (left_item, join_words, right_item(+alias), tail).  None when the
     shape is anything else."""
     n = len(f)
-    depth = 0
     join_at = -1
-    for i, t in enumerate(f):
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif depth == 0 and _kw(t) == "JOIN":
+    for i, t in _top_level(f, brackets="("):
+        if _kw(t) == "JOIN":
             if join_at >= 0:
                 return None
             join_at = i
-        elif depth == 0 and t == "," and join_at < 0:
+        elif t == "," and join_at < 0:
             return None  # comma join (commas after the JOIN belong to
             # a bare USING key list)
     if join_at < 0:
@@ -14986,13 +14782,8 @@ def _orig_table_alias_rewrite(q: _Select) -> None:
         return
     pairs: dict[str, set[str]] = {}
     aliases: set[str] = set()
-    depth = 0
-    for j, t in enumerate(f):
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif depth == 0 and _kw(t) == "AS" and 0 < j < len(f) - 1:
+    for j, t in _top_level(f):
+        if _kw(t) == "AS" and 0 < j < len(f) - 1:
             alias = f[j + 1].strip("`")
             aliases.add(alias)
             if not _is_ident(f[j - 1]) or f[j - 1] == ")":
@@ -15127,10 +14918,7 @@ def _on_alias_rewrite(q: _Select) -> None:
     f = q.from_
     if not f or not q.select:
         return
-    on_at = [
-        j for j, t in enumerate(f)
-        if _kw(t) == "ON" and _paren_depth_at(f, j) == 0
-    ]
+    on_at = [j for j, t in _top_level(f) if _kw(t) == "ON"]
     if not on_at:
         return
     amap: dict[str, list[str]] = {}
@@ -15156,13 +14944,10 @@ def _on_alias_rewrite(q: _Select) -> None:
     }
     spans: list[tuple[int, int]] = []
     for j in on_at:
-        k = j + 1
-        while k < len(f):
-            if _paren_depth_at(f, k) == 0 and (
-                _kw(f[k]) in jch or f[k] == ","
-            ):
-                break
-            k += 1
+        k = next(
+            (k for k, t in _top_level(f, j + 1) if _kw(t) in jch or t == ","),
+            len(f),
+        )
         spans.append((j + 1, k))
     res: list[str] = []
     for j, t in enumerate(f):
@@ -15249,13 +15034,8 @@ def _using_qualified_rewrite(q: _Select) -> None:
     ):
         return
     # `select *` would change shape under ON (keys no longer deduped)
-    d0 = 0
-    for k2, t2 in enumerate(q.select):
-        if t2 in ("(", "["):
-            d0 += 1
-        elif t2 in (")", "]"):
-            d0 -= 1
-        elif t2 == "*" and d0 == 0 and (
+    for k2, t2 in _top_level(q.select):
+        if t2 == "*" and (
             k2 == 0 or q.select[k2 - 1] != "."
         ):
             return
@@ -15511,10 +15291,7 @@ def _single_from_names(q: _Select) -> set[str]:
     FROM item: the trailing alias if present, else the table's own
     (undotted) name.  Empty for joins / underivable items."""
     f = list(q.from_ or [])
-    if any(
-        _kw(t) == "JOIN" and _paren_depth_at(f, k) == 0
-        for k, t in enumerate(f)
-    ):
+    if any(_kw(t) == "JOIN" for _, t in _top_level(f)):
         return set()
     src = f
     if len(src) >= 2 and _kw(src[-2]) == "AS" and _is_ident(src[-1]):
@@ -15541,10 +15318,7 @@ def _qcols_universe(q: _Select) -> list[tuple[str, str]] | None:
     underivable."""
     qcols: list[tuple[str, str]] = []
     f9 = list(q.from_ or [])
-    has_join9 = any(
-        _kw(t) == "JOIN" and _paren_depth_at(f9, k) == 0
-        for k, t in enumerate(f9)
-    )
+    has_join9 = any(_kw(t) == "JOIN" for _, t in _top_level(f9))
     if not has_join9:
         src = f9
         if len(src) >= 2 and _kw(src[-2]) == "AS" and _is_ident(src[-1]):
@@ -15561,23 +15335,19 @@ def _qcols_universe(q: _Select) -> list[tuple[str, str]] | None:
         return [(c, c) for c in cols]
     # split at depth-0 JOIN keywords; per item, strip join words,
     # the ON tail, and pull a trailing alias
-    items9: list[list[str]] = [[]]
-    d9 = 0
-    for t in f9:
-        if t == "(":
-            d9 += 1
-        elif t == ")":
-            d9 -= 1
-        if d9 == 0 and _kw(t) == "JOIN":
-            items9.append([])
-            continue
-        items9[-1].append(t)
+    items9: list[list[str]] = []
+    last9 = 0
+    for j9, t in _top_level(f9, brackets="("):
+        if _kw(t) == "JOIN":
+            items9.append(f9[last9:j9])
+            last9 = j9 + 1
+    items9.append(f9[last9:])
     _JW9 = {"LEFT", "RIGHT", "FULL", "INNER", "OUTER", "CROSS",
             "ANY", "ALL", "SEMI", "ANTI", "ASOF", "GLOBAL"}
     for it9 in items9:
         # drop trailing join-kind words and the ON condition
-        for k9, t9 in enumerate(it9):
-            if _paren_depth_at(it9, k9) == 0 and _kw(t9) == "ON":
+        for k9, t9 in _top_level(it9):
+            if _kw(t9) == "ON":
                 it9 = it9[:k9]
                 break
         while it9 and _kw(it9[-1]) in _JW9:
@@ -16149,12 +15919,11 @@ def _translate_select_tokens(toks: list[str]) -> tuple[str, dict[str, str]]:
     # occurrence (TreeRewriter normalization — 00702)
     f9u = q.from_
     out9u: list[str] = []
-    j9u = 0
-    while j9u < len(f9u):
+    last9u = 0
+    for j9u, t9u in _top_level(f9u):
         if (
-            _kw(f9u[j9u]) == "USING" and j9u + 1 < len(f9u)
-            and f9u[j9u + 1] == "("
-            and _paren_depth_at(f9u, j9u) == 0
+            _kw(t9u) == "USING" and j9u + 1 < len(f9u)
+            and f9u[j9u + 1] == "(" and j9u >= last9u
         ):
             c9u = _match_paren(f9u, j9u + 1)
             keys9u: list[str] = []
@@ -16162,12 +15931,10 @@ def _translate_select_tokens(toks: list[str]) -> tuple[str, dict[str, str]]:
                 k9u = _emit(part)
                 if k9u not in keys9u:
                     keys9u.append(k9u)
-            out9u += ["USING", "("] + tokenize(", ".join(keys9u)) + [")"]
-            j9u = c9u + 1
-            continue
-        out9u.append(f9u[j9u])
-        j9u += 1
-    q.from_ = out9u
+            out9u += f9u[last9u:j9u] + ["USING", "("]
+            out9u += tokenize(", ".join(keys9u)) + [")"]
+            last9u = c9u + 1
+    q.from_ = out9u + f9u[last9u:]
     _orig_table_alias_rewrite(q)
     _dotted_column_rewrite(q)
     _on_alias_rewrite(q)
@@ -16198,8 +15965,8 @@ def _translate_select_tokens(toks: list[str]) -> tuple[str, dict[str, str]]:
         "join_default_strictness", "ALL"
     )).strip("'\" ") == "":
         f0 = q.from_ or []
-        for k0, t0 in enumerate(f0):
-            if _kw(t0) == "JOIN" and _paren_depth_at(f0, k0) == 0:
+        for k0, t0 in _top_level(f0):
+            if _kw(t0) == "JOIN":
                 words0 = {
                     _kw(x) for x in f0[max(0, k0 - 3) : k0]
                 }
@@ -16213,13 +15980,8 @@ def _translate_select_tokens(toks: list[str]) -> tuple[str, dict[str, str]]:
     # no-FROM star forms: `SELECT *` is the system.one dummy row (one
     # UInt8 0); a QUALIFIED star without a FROM is reference error 47
     if not q.from_:
-        d_st = 0
-        for k_st, t_st in enumerate(q.select):
-            if t_st in ("(", "["):
-                d_st += 1
-            elif t_st in (")", "]"):
-                d_st -= 1
-            elif d_st == 0 and t_st == "*" and k_st > 0 and (
+        for k_st, t_st in _top_level(q.select):
+            if t_st == "*" and k_st > 0 and (
                 q.select[k_st - 1] == "."
             ):
                 raise DialectError("qualified star without FROM")
@@ -16261,18 +16023,16 @@ def _subq_cols(inner: list[str]) -> dict[str, str]:
     list (numeric 0 / string '' / date epoch, inferred from the raw
     expression text)."""
     cols: dict[str, str] = {}
-    depth = 0
-    body: list[str] = []
-    for tk in inner[1:]:
-        if tk == "(":
-            depth += 1
-        elif tk == ")":
-            depth -= 1
-        if depth == 0 and _kw(tk) in (
-            "FROM", "WHERE", "GROUP", "ORDER", "LIMIT", "HAVING", "UNION",
-        ):
-            break
-        body.append(tk)
+    stop = next(
+        (
+            j for j, tk in _top_level(inner, 1, brackets="(")
+            if _kw(tk) in (
+                "FROM", "WHERE", "GROUP", "ORDER", "LIMIT", "HAVING", "UNION",
+            )
+        ),
+        len(inner),
+    )
+    body = inner[1:stop]
     for item in _split_top(body, ","):
         if not item:
             continue
@@ -16736,40 +16496,24 @@ def _alias_subquery_outputs(toks: list[str]) -> list[str]:
     if _EXPR_SUBQ_CTX.get():
         return toks  # IN/scalar subqueries keep their raw column list
     # locate the top-level SELECT and its item span
-    depth = 0
     sel = None
-    for j, t in enumerate(toks):
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif depth == 0:
-            k = _kw(t)
-            if k == "SELECT":
-                sel = j
-                break
-            if k == "UNION":
-                return toks
+    for j, t in _top_level(toks):
+        k = _kw(t)
+        if k == "SELECT":
+            sel = j
+            break
+        if k == "UNION":
+            return toks
     if sel is None:
         return toks
     start = sel + 1
     if start < len(toks) and _kw(toks[start]) == "DISTINCT":
         start += 1
-    depth = 0
-    end = len(toks)
-    for j in range(start, len(toks)):
-        t = toks[j]
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif depth == 0 and _kw(t) in _SEL_END_KWS:
-            end = j
-            break
-    if any(
-        _paren_depth_at(toks, j) == 0 and _kw(t) == "UNION"
-        for j, t in enumerate(toks[end:], end)
-    ):
+    end = next(
+        (j for j, t in _top_level(toks, start) if _kw(t) in _SEL_END_KWS),
+        len(toks),
+    )
+    if any(_kw(t) == "UNION" for _, t in _top_level(toks, end)):
         return toks  # UNION branches share names from the first SELECT
     items = _split_top(toks[start:end], ",")
     amap: dict[str, list[str]] = {}
@@ -16832,22 +16576,16 @@ def _alias_subquery_outputs(toks: list[str]) -> list[str]:
             new_items.append(it)
             continue
         # depth-0 shape scan: pure call / pure ||-chain qualify
-        d9 = 0
         bad = False
         pipes: list[int] = []
-        for k9, t9 in enumerate(it):
-            if t9 in ("(", "["):
-                d9 += 1
-            elif t9 in (")", "]"):
-                d9 -= 1
-            elif d9 == 0:
-                if t9 in _INFIX9 or (
-                    _is_ident(t9) and _kw(t9) in _SQL_KEYWORDS
-                ):
-                    bad = True
-                    break
-                if t9 == "||":
-                    pipes.append(k9)
+        for k9, t9 in _top_level(it):
+            if t9 in _INFIX9 or (
+                _is_ident(t9) and _kw(t9) in _SQL_KEYWORDS
+            ):
+                bad = True
+                break
+            if t9 == "||":
+                pipes.append(k9)
         call_shape = (
             len(it) >= 3 and _is_ident(it[0]) and it[1] == "("
             and _match_paren(it, 1) == len(it) - 1
@@ -16914,17 +16652,10 @@ def _translate_query_inner(toks: list[str]) -> tuple[str, dict[str, str]]:
     if toks and _kw(toks[0]) == "WITH":
         n = len(toks)
         # find the SELECT that ends the WITH clause (depth-0 scan)
-        depth = 0
-        sel = None
-        for j in range(1, n):
-            tk = toks[j]
-            if tk in ("(", "["):
-                depth += 1
-            elif tk in (")", "]"):
-                depth -= 1
-            elif depth == 0 and _kw(tk) == "SELECT":
-                sel = j
-                break
+        sel = next(
+            (j for j, tk in _top_level(toks, 1, n) if _kw(tk) == "SELECT"),
+            None,
+        )
         if sel is None:
             raise DialectError("WITH without a SELECT body")
         ctes: list[list[str]] = []
@@ -16987,28 +16718,17 @@ def _translate_query_inner(toks: list[str]) -> tuple[str, dict[str, str]]:
     # split top-level UNION
     parts: list[list[str]] = []
     seps: list[str] = []
-    cur: list[str] = []
-    depth = 0
-    i = 0
-    n = len(toks)
-    while i < n:
-        t = toks[i]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        if depth == 0 and _kw(t) == "UNION":
+    last = 0
+    for i, t in _top_level(toks, brackets="("):
+        if _kw(t) == "UNION":
+            parts.append(toks[last:i])
+            last = i + 1
             mode = "DISTINCT"
-            if i + 1 < n and _kw(toks[i + 1]) in ("ALL", "DISTINCT"):
-                mode = _kw(toks[i + 1])
-                i += 1
-            parts.append(cur)
+            if last < len(toks) and _kw(toks[last]) in ("ALL", "DISTINCT"):
+                mode = _kw(toks[last])
+                last += 1
             seps.append("UNION " + mode)
-            cur = []
-        else:
-            cur.append(t)
-        i += 1
-    parts.append(cur)
+    parts.append(toks[last:])
     rendered_parts = []
     settings: dict[str, str] = {}
     for p in parts:
@@ -17039,7 +16759,7 @@ def _translate_pipe(stages: list[list[str]]) -> tuple[str, dict[str, str]]:
             raise DialectError("empty pipe stage")
         head = _kw(stage[0])
         if head == "WHERE":
-            cond_toks, *set_toks = _split_top_kw(stage[1:], "SETTINGS")
+            cond_toks, *set_toks = _split_top(stage[1:], "SETTINGS")
             for st in set_toks:
                 all_settings.update(_parse_settings(st))
             cond = _emit(_translate_expr(cond_toks))
@@ -17316,14 +17036,9 @@ def _dist_localize_subqueries(toks: list[str]) -> list[str]:
     if not (mode_local or no_merge):
         return toks
     top_has_dist = False
-    depth = 0
-    for j, t in enumerate(toks):
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif (
-            depth == 0 and t.strip("`") in dist_local
+    for j, t in _top_level(toks):
+        if (
+            t.strip("`") in dist_local
             and (j == 0 or toks[j - 1] != ".")
             and (j + 1 >= len(toks) or toks[j + 1] != ".")
         ):

@@ -45,8 +45,8 @@ from daisy_spark.plans.dialect import (
     _kw,
     _map_type,
     _match_paren,
-    _paren_depth_at,
     _split_top,
+    _top_level,
     _translate_expr,
     sql as dialect_sql,
     tokenize,
@@ -259,11 +259,7 @@ def _render_index_defs(span: list[str]) -> list[str]:
             continue
         nm = part[1].strip('`"')
         tpos = next(
-            (
-                k for k in range(2, len(part))
-                if _kw(part[k]) == "TYPE"
-                and _paren_depth_at(part, k) == 0
-            ),
+            (k for k, x in _top_level(part) if k > 1 and _kw(x) == "TYPE"),
             len(part),
         )
         expr = ch_expr(strip_outer_parens(part[2:tpos]))
@@ -710,10 +706,7 @@ class ScriptRunner:
                 and _match_paren(toks, 3) == len(toks) - 1
             ):
                 sub9 = toks[4:-1]
-                if any(
-                    _kw(x) == "TOTALS" and _paren_depth_at(sub9, k) == 0
-                    for k, x in enumerate(sub9)
-                ):
+                if any(_kw(x) == "TOTALS" for _, x in _top_level(sub9)):
                     toks = sub9
                     stmt = _emit(toks)
             df150 = self._totals_under_join(toks)
@@ -1613,18 +1606,13 @@ class ScriptRunner:
             elif up == "TTL":
                 # table TTL: capture for SHOW CREATE (data expiry itself
                 # is handled by maintenance.apply_ttl)
-                j0 = i + 1
-                depth0 = 0
-                while j0 < n:
-                    if toks[j0] == "(":
-                        depth0 += 1
-                    elif toks[j0] == ")":
-                        depth0 -= 1
-                    elif depth0 == 0 and _kw(toks[j0]) in (
-                        "SETTINGS", "COMMENT", "AS",
-                    ):
-                        break
-                    j0 += 1
+                j0 = next(
+                    (
+                        j for j, x in _top_level(toks, i + 1, n, brackets="(")
+                        if _kw(x) in ("SETTINGS", "COMMENT", "AS")
+                    ),
+                    max(i + 1, n),
+                )
                 ttl_raw = ch_expr(toks[i + 1 : j0])
                 i = j0
             elif up == "SETTINGS":
@@ -1845,10 +1833,8 @@ class ScriptRunner:
                     body9 = as_select[1:]
                     for stop9 in ("FROM", "GROUP", "WHERE", "ORDER",
                                   "HAVING", "LIMIT", "SETTINGS"):
-                        for k9, tk9 in enumerate(body9):
-                            if _kw(tk9) == stop9 and _paren_depth_at(
-                                body9, k9
-                            ) == 0:
+                        for k9, tk9 in _top_level(body9):
+                            if _kw(tk9) == stop9:
                                 body9 = body9[:k9]
                                 break
                     for k9, it9 in enumerate(_split_top(body9, ",")):
@@ -1952,18 +1938,15 @@ class ScriptRunner:
             j, kept = 1, [part[0]]
             while j < len(part):
                 if _kw(part[j]) == "EXPRESSION" and j + 1 < len(part):
-                    k = j + 1
-                    depth = 0
-                    while k < len(part):
-                        if part[k] == "(":
-                            depth += 1
-                        elif part[k] == ")":
-                            depth -= 1
-                        elif depth == 0 and _kw(part[k]) in (
-                            "HIERARCHICAL", "INJECTIVE", "IS_OBJECT_ID",
-                        ):
-                            break
-                        k += 1
+                    k = next(
+                        (
+                            m for m, x in _top_level(part, j + 1, brackets="(")
+                            if _kw(x) in (
+                                "HIERARCHICAL", "INJECTIVE", "IS_OBJECT_ID",
+                            )
+                        ),
+                        len(part),
+                    )
                     expr_toks = part[j + 1 : k]
                     # a quoted literal holds reference-dialect SQL text
                     if len(expr_toks) == 1 and expr_toks[0].startswith("'"):
@@ -2137,9 +2120,8 @@ class ScriptRunner:
             return out
         stop = next(
             (
-                k for k in range(1, len(sel_toks))
-                if _paren_depth_at(sel_toks, k) == 0
-                and _kw(sel_toks[k]) in (
+                k for k, x in _top_level(sel_toks, 1)
+                if _kw(x) in (
                     "FROM", "WHERE", "GROUP", "ORDER", "LIMIT", "SETTINGS",
                 )
             ),
@@ -2203,19 +2185,15 @@ class ScriptRunner:
             target, i = self._table_name(toks, i + 1)
         populate = False
         # skip engine/partition/order clauses up to the top-level AS
-        depth = 0
-        while i < n:
-            if toks[i] == "(":
-                depth += 1
-            elif toks[i] == ")":
-                depth -= 1
-            elif depth == 0 and _kw(toks[i]) == "POPULATE":
+        for i, x in _top_level(toks, i, n, brackets="("):
+            if _kw(x) == "POPULATE":
                 populate = True
-            elif depth == 0 and _kw(toks[i]) == "AS" and i + 1 < n and (
+            elif _kw(x) == "AS" and i + 1 < n and (
                 _kw(toks[i + 1]) in ("SELECT", "WITH") or toks[i + 1] == "("
             ):
                 break
-            i += 1
+        else:
+            i = n
         if i >= n:
             raise DialectError("CREATE MATERIALIZED VIEW requires AS SELECT")
         query_toks = toks[i + 1 :]
@@ -2350,11 +2328,8 @@ class ScriptRunner:
         # trailing SETTINGS (mutations_sync etc.): mutations here are
         # always synchronous — accept and drop
         rest = toks[i:]
-        for k in range(len(rest)):
-            if (
-                _kw(rest[k]) == "SETTINGS"
-                and _paren_depth_at(rest, k) == 0
-            ):
+        for k, x in _top_level(rest):
+            if _kw(x) == "SETTINGS":
                 rest = rest[:k]
                 break
         acts = [a for a in _split_top(rest, ",") if a]
@@ -2436,12 +2411,9 @@ class ScriptRunner:
             return
         if _kw(rest9[0]) in ("DEFAULT", "MATERIALIZED", "ALIAS", "COMMENT"):
             return  # default-only change: metadata
-        if any(
-            _kw(x) == "TTL" and _paren_depth_at(rest9, k9) == 0
-            for k9, x in enumerate(rest9)
-        ) and str(self.settings.get(
-            "materialize_ttl_after_modify", "1"
-        )).strip("'\" ") != "0":
+        if any(_kw(x) == "TTL" for _, x in _top_level(rest9)) and str(
+            self.settings.get("materialize_ttl_after_modify", "1")
+        ).strip("'\" ") != "0":
             raise DialectError(
                 "ALTER of column is forbidden: TTL materialization (524)"
             )
@@ -2583,9 +2555,8 @@ class ScriptRunner:
                 if tk in ("DEFAULT", "MATERIALIZED", "ALIAS"):
                     stop = next(
                         (
-                            k for k in range(1, len(tail))
-                            if _paren_depth_at(tail, k) == 0
-                            and _kw(tail[k]) in ("TTL", "CODEC", "COMMENT")
+                            k for k, x in _top_level(tail, 1)
+                            if _kw(x) in ("TTL", "CODEC", "COMMENT")
                         ),
                         len(tail),
                     )
@@ -2597,11 +2568,8 @@ class ScriptRunner:
                 elif tk == "TTL":
                     stop = next(
                         (
-                            k for k in range(1, len(tail))
-                            if _paren_depth_at(tail, k) == 0
-                            and _kw(tail[k]) in (
-                                "DEFAULT", "CODEC", "COMMENT",
-                            )
+                            k for k, x in _top_level(tail, 1)
+                            if _kw(x) in ("DEFAULT", "CODEC", "COMMENT")
                         ),
                         len(tail),
                     )
@@ -2810,14 +2778,9 @@ class ScriptRunner:
         totals (or defaults) block."""
         if _kw(toks[0]) != "SELECT":
             return None
-        depth = 0
         fr = None
-        for i, t in enumerate(toks):
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                depth -= 1
-            elif depth == 0 and _kw(t) == "FROM":
+        for i, t in _top_level(toks, brackets="("):
+            if _kw(t) == "FROM":
                 fr = i
                 break
         if fr is None or fr + 1 >= len(toks) or toks[fr + 1] != "(":
@@ -2840,33 +2803,23 @@ class ScriptRunner:
         tail = toks[close_b + 1:]
 
         def _has_totals(sub: list[str]) -> bool:
-            return any(
-                _kw(x) == "TOTALS" and _paren_depth_at(sub, k) == 0
-                for k, x in enumerate(sub)
-            )
+            return any(_kw(x) == "TOTALS" for _, x in _top_level(sub))
 
         def _strip_totals(sub: list[str]) -> list[str]:
-            out = []
-            k = 0
-            while k < len(sub):
-                if (
-                    _kw(sub[k]) == "WITH" and k + 1 < len(sub)
-                    and _kw(sub[k + 1]) == "TOTALS"
-                    and _paren_depth_at(sub, k) == 0
-                ):
-                    k += 2
-                    continue
-                out.append(sub[k])
-                k += 1
-            return out
+            drop = {
+                k for k, x in _top_level(sub)
+                if _kw(x) == "WITH" and k + 1 < len(sub)
+                and _kw(sub[k + 1]) == "TOTALS"
+            }
+            return [
+                x for k, x in enumerate(sub)
+                if k not in drop and k - 1 not in drop
+            ]
 
         ta, tb = _has_totals(sub_a), _has_totals(sub_b)
         if not (ta or tb):
             return None
-        if any(
-            _kw(x) == "JOIN" and _paren_depth_at(tail, k) == 0
-            for k, x in enumerate(tail)
-        ):
+        if any(_kw(x) == "JOIN" for _, x in _top_level(tail)):
             return None  # >2-way joins: out of scope, keep regular path
         sa, sb = _strip_totals(sub_a), _strip_totals(sub_b)
         regular = self._execute_core(_emit(
@@ -3114,23 +3067,16 @@ class ScriptRunner:
                     # expression runs until the next modifier keyword at
                     # paren depth 0 (CODEC only when called: a column may
                     # legitimately be named `codec`)
-                    k = j + 1
-                    depth = 0
-                    while k < len(part):
-                        tok = part[k]
-                        if tok == "(":
-                            depth += 1
-                        elif tok == ")":
-                            depth -= 1
-                        elif depth == 0:
-                            kw2 = _kw(tok)
-                            if kw2 in ("TTL", "COMMENT") or (
-                                kw2 == "CODEC"
-                                and k + 1 < len(part)
-                                and part[k + 1] == "("
-                            ):
-                                break
-                        k += 1
+                    k = len(part)
+                    for m, tok in _top_level(part, j + 1, brackets="("):
+                        kw2 = _kw(tok)
+                        if kw2 in ("TTL", "COMMENT") or (
+                            kw2 == "CODEC"
+                            and m + 1 < len(part)
+                            and part[m + 1] == "("
+                        ):
+                            k = m
+                            break
                     # translate WITH the earlier columns' types visible
                     # (decimal division truncation needs the numerator's
                     # declared scale)
@@ -3179,18 +3125,13 @@ class ScriptRunner:
                     j = _match_paren(part, j + 1) + 1
                 elif kw == "TTL":
                     # column TTL: SHOW CREATE fidelity only
-                    k = j + 1
-                    depth = 0
-                    while k < len(part):
-                        if part[k] == "(":
-                            depth += 1
-                        elif part[k] == ")":
-                            depth -= 1
-                        elif depth == 0 and _kw(part[k]) in (
-                            "COMMENT", "CODEC", "DEFAULT",
-                        ):
-                            break
-                        k += 1
+                    k = next(
+                        (
+                            m for m, x in _top_level(part, j + 1, brackets="(")
+                            if _kw(x) in ("COMMENT", "CODEC", "DEFAULT")
+                        ),
+                        max(j + 1, len(part)),
+                    )
                     col_ttl = ch_expr(part[j + 1 : k])
                     j = k
                 elif kw == "COMMENT":
@@ -3221,14 +3162,9 @@ class ScriptRunner:
         )
 
         toks = tokenize(raw)
-        depth = 0
         op_at = None
-        for k, t in enumerate(toks):
-            if t in ("(", "["):
-                depth += 1
-            elif t in (")", "]"):
-                depth -= 1
-            elif depth == 0 and t in ("+", "-", "*", "/") and k > 0:
+        for k, t in _top_level(toks):
+            if t in ("+", "-", "*", "/") and k > 0:
                 if toks[k - 1] in ("(", "[", ",", "+", "-", "*", "/"):
                     continue  # unary sign
                 if op_at is not None:

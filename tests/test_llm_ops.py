@@ -22,18 +22,37 @@ def test_exact_dedup_keeps_lowest_id(spark):
     assert sorted(r.doc_id for r in out.collect()) == [1, 3]
 
 
-def test_minhash_finds_planted_near_dup(spark):
+def _planted_near_dup(spark):
     base = "the quick brown fox jumps over the lazy dog again and again ok"
     near = base.replace("lazy", "sleepy")  # 1-word change
     rows = [(0, base), (1, near)] + [
         (i, f"totally different doc number {i} with words w{i} x{i} y{i} z{i} q{i} r{i} s{i}")
         for i in range(2, 30)
     ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    return spark.createDataFrame(rows, ["doc_id", "text"])
+
+
+def test_minhash_finds_planted_near_dup(spark):
     pairs = D.minhash_dedup_pairs(
-        df, "text", "doc_id", threshold=0.5
+        _planted_near_dup(spark), "text", "doc_id", threshold=0.5
     ).collect()
     assert {(r.id1, r.id2) for r in pairs} == {(0, 1)}
+
+
+def test_minhash_dedup_pairs_caches_nothing(spark, spark_jobs):
+    pairs = D.minhash_dedup_pairs(
+        _planted_near_dup(spark), "text", "doc_id", threshold=0.5
+    )
+    out, jobs = spark_jobs(lambda: pairs.collect())
+    assert {(r.id1, r.id2) for r in out} == {(0, 1)}
+    plan = pairs._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert "InMemory" not in plan, plan
+    # the signature UDF runs once, and both verify join sides read one
+    # reused exchange of the hashed shingles
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert plan.count("xxhash64(lambda") == 2, plan
+    assert "ReusedExchange" in plan, plan
+    assert jobs <= 7, jobs
 
 
 def test_simhash_identical_docs_zero_hamming(spark):

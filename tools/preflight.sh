@@ -7,9 +7,10 @@
 # Usage:  tools/preflight.sh [--fast]
 #   default: full pytest suite (the round's hard gate)
 #   --fast:  corpus suite, dialect/script units, the translate() golden
-#            net, the function-semantics cases and the SimHash kernel
-#            tests (~1.5 min), for intermediate checkpoints; the FINAL
-#            commit needs the default.
+#            net, the bracket-walker tests, chexplain (it parses with the
+#            dialect tokenizer), the function-semantics cases and the
+#            SimHash kernel tests (~1.5 min), for intermediate
+#            checkpoints; the FINAL commit needs the default.
 #
 # On success writes tools/preflight.ok with the CONTENT-TREE hash it
 # verified (git write-tree of the would-be commit), so the record can be
@@ -22,7 +23,8 @@ cd "$(dirname "$0")/.."
 
 if [[ "${1:-}" == "--fast" ]]; then
     TARGETS=(tests/test_reference_corpus.py tests/test_dialect.py tests/test_script.py
-             tests/test_translate_golden.py tests/test_scalar_registry.py
+             tests/test_translate_golden.py tests/test_top_level.py
+             tests/test_chexplain.py tests/test_scalar_registry.py
              tests/test_simhash.py)
 else
     TARGETS=(tests/)
