@@ -378,9 +378,10 @@ def minhash_dedup_pairs(
     # shingles feed the signature AND both verify sides.  The verify-side
     # hashed arrays are built HERE, once — the hashing transform is an
     # interpreted higher-order function, and leaving it inside
-    # jaccard_verify evaluated it once per join side.  No persist: the
-    # cache added its own jobs and hid Spark's exchange reuse, which
-    # already lets the consumers share one shingling pass
+    # jaccard_verify evaluated it once per join side.  No persist: a
+    # cache adds its own jobs and hides Spark's exchange reuse, which
+    # lets both verify sides read one exchange (the signature branch
+    # hashes the shingles once more, inside its UDF's input)
     shingled = with_shingles(df, text_col, k=shingle_k).select(
         id_col,
         F.array_distinct(
