@@ -204,9 +204,6 @@ def _match_paren(toks: list[str], i: int) -> int:
     raise DialectError("unbalanced parentheses")
 
 
-_CLOSER = {"(": ")", "[": "]"}
-
-
 def _top_level(toks: list[str], start: int = 0, stop: int | None = None,
                brackets: str = "(["):
     """Yield ``(j, tok)`` for each token of ``toks[start:stop]`` at
@@ -220,11 +217,12 @@ def _top_level(toks: list[str], start: int = 0, stop: int | None = None,
 
     Scans that need more than "is this token at depth 0" keep their own
     counter: backward scans (which count closers up), scans that read
-    a depth other than 0 (matching a closer, or acting one level in),
-    and scans that copy tokens at every depth.
+    depth at a closer (matching it, or stopping at an unmatched one),
+    character scans that must skip string literals, scans that copy
+    tokens at every depth, and scans that jump past tokens unread.
     """
     opens = tuple(brackets)
-    closes = tuple(_CLOSER[b] for b in brackets)
+    closes = tuple({"(": ")", "[": "]"}[b] for b in brackets)
     depth = 0
     for j in range(*slice(start, stop).indices(len(toks))):
         t = toks[j]
@@ -5180,27 +5178,6 @@ def _mjd_from_expr(a: list[str], or_null: bool) -> str:
     )
 
 
-def _fe_matrix(col: str) -> str:
-    """A ForEach of sumForEach states over the finalized-state model: a
-    sumForEachState IS its per-position sum array, so the ForEach of
-    states is an array (by position) of elementwise-summed arrays over
-    the collected rows ``col``."""
-    ml = f"array_max(transform({col}, __fa -> size(__fa)))"
-    at = (
-        f"filter(transform({col}, __fa -> "
-        f"element_at(__fa, CAST(__fi AS INT))), "
-        f"__fv -> __fv IS NOT NULL)"
-    )
-    esum = (
-        f"aggregate({at}, CAST(NULL AS ARRAY<DOUBLE>), "
-        f"(__ac, __ar) -> IF(__ac IS NULL, "
-        f"transform(__ar, __v -> CAST(__v AS DOUBLE)), "
-        f"zip_with(__ac, __ar, (__x, __y) -> "
-        f"__x + CAST(__y AS DOUBLE))))"
-    )
-    return f"transform(sequence(1, {ml}), __fi -> {esum})"
-
-
 FUNC_MAP: dict[str, object] = {
     # arithmetic / comparison / logic
     "plus": "({0} + {1})", "minus": "({0} - {1})", "multiply": "({0} * {1})",
@@ -6933,35 +6910,6 @@ FUNC_MAP: dict[str, object] = {
     "groupArrayArray": "flatten(collect_list({0}))",
     "groupUniqArrayArray": (
         "array_distinct(flatten(collect_list({0})))"
-    ),
-    # set-aggregate state fed per-element by -Array: the stored state is
-    # one distinct set of all row elements (00720 — order of -Array vs
-    # -State is immaterial here)
-    "groupUniqArrayStateArray": "array_distinct(flatten(collect_list({0})))",
-    "groupUniqArrayArrayState": "array_distinct(flatten(collect_list({0})))",
-    # per-position set states; -Array unwraps the outer array so each
-    # inner array is a ForEach input
-    "groupUniqArrayForEachStateArray": (
-        "transform(sequence(1, array_max(transform("
-        "flatten(collect_list({0})), __fa -> size(__fa)))), __fi -> "
-        "array_distinct(filter(transform(flatten(collect_list({0})), "
-        "__fa -> element_at(__fa, CAST(__fi AS INT))), "
-        "__fv -> __fv IS NOT NULL)))"
-    ),
-    # the 00545 combinator tower (see _fe_matrix); both -Ifs are row
-    # masks after the -Array unwrap
-    "sumForEachStateForEachIfArrayIfState": lambda a: _fe_matrix(
-        f"filter(flatten(collect_list(CASE WHEN CAST({a[2]} AS BOOLEAN) "
-        f"THEN zip_with({a[0]}, {a[1]}, (__d, __m) -> "
-        f"IF(CAST(__m AS BOOLEAN), __d, NULL)) END)), "
-        f"__kv -> __kv IS NOT NULL)"
-    ),
-    "sumForEachStateForEachIfArrayIfMerge": lambda a: _fe_matrix(
-        f"collect_list({a[0]})"
-    ),
-    # sumForEachMergeArray ≡ sumForEachArray here
-    "sumForEachMergeArray": lambda a: _agg_combinator_expr(
-        "sumForEachArray", a
     ),
     # -Array combinator over TWO-argument argMin/argMax: all element
     # pairs across rows compete (AggregateFunctionArray + argMin)
@@ -10296,6 +10244,73 @@ def _translate_expr(toks: list[str], in_list: bool = False) -> list[str]:
                 # SQL-compat alias names are case-insensitive in the
                 # reference (EXTRACT, Locate, UCASE, DATE_DIFF, ...)
                 tmpl = FUNC_MAP.get(t.lower())
+            if tmpl is None and t in (
+                "groupUniqArrayStateArray", "groupUniqArrayArrayState",
+            ):
+                # set-aggregate state fed per-element by -Array: the
+                # stored state is one distinct set of all row elements
+                # (00720 — order of -Array vs -State is immaterial here)
+                tmpl = "array_distinct(flatten(collect_list({0})))"
+            if tmpl is None and t in (
+                "sumForEachStateForEachIfArrayIfState",
+                "sumForEachStateForEachIfArrayIfMerge",
+                "sumForEachMergeArray",
+            ):
+                # the 00545 combinator tower over the finalized-state
+                # model: a sumForEachState IS its per-position sum
+                # array, so the ForEach-of-states is an array (position)
+                # of elementwise-summed arrays; -Array unwraps the outer
+                # array, both -Ifs are row masks after the unwrap
+                def _fe_matrix(col9: str) -> str:
+                    ml9 = (
+                        f"array_max(transform({col9}, "
+                        f"__fa -> size(__fa)))"
+                    )
+                    at9 = (
+                        f"filter(transform({col9}, __fa -> "
+                        f"element_at(__fa, CAST(__fi AS INT))), "
+                        f"__fv -> __fv IS NOT NULL)"
+                    )
+                    esum9 = (
+                        f"aggregate({at9}, CAST(NULL AS ARRAY<DOUBLE>), "
+                        f"(__ac, __ar) -> IF(__ac IS NULL, "
+                        f"transform(__ar, __v -> CAST(__v AS DOUBLE)), "
+                        f"zip_with(__ac, __ar, (__x, __y) -> "
+                        f"__x + CAST(__y AS DOUBLE))))"
+                    )
+                    return (
+                        f"transform(sequence(1, {ml9}), __fi -> {esum9})"
+                    )
+
+                if t == "sumForEachStateForEachIfArrayIfState":
+                    tmpl = lambda a: _fe_matrix(  # noqa: E731
+                        f"filter(flatten(collect_list(CASE WHEN "
+                        f"CAST({a[2]} AS BOOLEAN) THEN "
+                        f"zip_with({a[0]}, {a[1]}, (__d, __m) -> "
+                        f"IF(CAST(__m AS BOOLEAN), __d, NULL)) END)), "
+                        f"__kv -> __kv IS NOT NULL)"
+                    )
+                elif t == "sumForEachStateForEachIfArrayIfMerge":
+                    tmpl = lambda a: _fe_matrix(  # noqa: E731
+                        f"collect_list({a[0]})"
+                    )
+                else:  # sumForEachMergeArray ≡ sumForEachArray here
+                    tmpl = lambda a: (  # noqa: E731
+                        _agg_combinator_expr("sumForEachArray", a)
+                    )
+            if tmpl is None and t == "groupUniqArrayForEachStateArray":
+                # per-position set states; -Array unwraps the outer
+                # array so each inner array is a ForEach input
+                col_fs = "flatten(collect_list({0}))"
+                ml_fs = f"array_max(transform({col_fs}, __fa -> size(__fa)))"
+                one_fs = (
+                    f"array_distinct(filter(transform({col_fs}, "
+                    f"__fa -> element_at(__fa, CAST(__fi AS INT))), "
+                    f"__fv -> __fv IS NOT NULL))"
+                )
+                tmpl = (
+                    f"transform(sequence(1, {ml_fs}), __fi -> {one_fs})"
+                )
             if tmpl is None and re.fullmatch(
                 r"(\w+?)Merge(State|OrNull)", t
             ):
